@@ -34,6 +34,7 @@ from pitfeat.ops.normalize import (
     compute_minmax,
     compute_moments,
     compute_quantiles,
+    minmax_aggs,
     normalize_minmax,
     normalize_zscore,
     prune_degenerate,
@@ -217,17 +218,12 @@ def _flagship_with_manifest(
     # r8: the min/max stats ride ALONG the checkpoint write via observe()
     # (CollectMetrics — no exchange, no extra pass) instead of a separate
     # agg job re-reading the checkpoint. The aggregate expressions are
-    # compute_minmax's exactly (min/max over when(~isnan), NULL-excluded),
-    # and min/max are order-insensitive, so the stats are identical.
+    # compute_minmax's own (minmax_aggs), and min/max are
+    # order-insensitive, so the stats are identical.
     from pyspark.sql import Observation
 
     obs = Observation()
-    obs_aggs = []
-    for c in feats:
-        clean = F.when(~F.isnan(F.col(c)), F.col(c))
-        obs_aggs.append(F.min(clean).alias(f"__mn_{c}"))
-        obs_aggs.append(F.max(clean).alias(f"__mx_{c}"))
-    out = out.observe(obs, *obs_aggs)
+    out = out.observe(obs, *minmax_aggs(feats))
     out.write.mode("overwrite").parquet(cut)
     orow = obs.get
     stats = MinMaxStats(

@@ -13,9 +13,10 @@ A checkpoint directory holds:
 ``resume_or_compute`` is the resumability primitive: if a valid checkpoint
 exists whose lineage hash matches (same config + same declared inputs), the
 stage is read back instead of recomputed; otherwise the stage function runs
-and is checkpointed. Per-partition metrics (partition id, rows, bytes) are
-collected by a zero-copy ``mapInArrow`` counting pass at write time, giving
-any partition's computation an audit trail.
+and is checkpointed. Per-partition metrics (partition id = part-file name,
+rows, bytes) are read from the written Parquet footers on the driver — no
+Spark job beyond the write itself — giving any partition's computation an
+audit trail.
 """
 
 from __future__ import annotations
@@ -23,37 +24,13 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Callable, Iterator
+from typing import Callable
 
-import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 MARKER = "_SUCCESS_PITFEAT"
 LINEAGE = "_lineage.json"
-
-
-def _partition_metrics(df: DataFrame) -> list[dict]:
-    """One row per partition: (partition uuid, rows, approx bytes). Streaming
-    Arrow pass — counts without materializing."""
-
-    def count(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import uuid
-
-        pid = uuid.uuid4().hex[:12]
-        rows = 0
-        nbytes = 0
-        for b in batches:
-            rows += b.num_rows
-            nbytes += sum(
-                buf.size for col in b.columns for buf in col.buffers() if buf is not None
-            )
-        yield pa.RecordBatch.from_pydict(
-            {"pid": [pid], "rows": [rows], "bytes": [nbytes]},
-            schema=pa.schema([("pid", pa.string()), ("rows", pa.int64()), ("bytes", pa.int64())]),
-        )
-
-    out = df.mapInArrow(count, schema="pid string, rows long, bytes long").collect()
-    return [r.asDict() for r in out]
 
 
 def write_checkpoint(
@@ -62,7 +39,6 @@ def write_checkpoint(
     stage: str,
     config_hash: str,
     inputs: list[str] | None = None,
-    partition_by: list[str] | None = None,
 ) -> dict:
     data_dir = os.path.join(ckpt_dir, "data")
     # Invalidate FIRST: a crash mid-rewrite must leave the checkpoint absent,
@@ -73,13 +49,22 @@ def write_checkpoint(
         p = os.path.join(ckpt_dir, stale)
         if os.path.exists(p):
             os.remove(p)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(data_dir)
+    df.write.mode("overwrite").parquet(data_dir)
 
-    back = df.sparkSession.read.parquet(data_dir)
-    parts = _partition_metrics(back)
+    # one part file per non-empty write task; hidden (_/.) names are Spark's
+    # commit and checksum files
+    parts = []
+    for name in sorted(os.listdir(data_dir)):
+        if name.startswith(("_", ".")):
+            continue
+        path = os.path.join(data_dir, name)
+        parts.append(
+            {
+                "pid": name,
+                "rows": pq.read_metadata(path).num_rows,
+                "bytes": os.path.getsize(path),
+            }
+        )
     lineage = {
         "stage": stage,
         "config_hash": config_hash,
@@ -88,7 +73,7 @@ def write_checkpoint(
         "total_rows": int(sum(p["rows"] for p in parts)),
         "n_partitions": len(parts),
         "partitions": parts,
-        "schema": back.schema.jsonValue(),
+        "schema": df.schema.jsonValue(),
     }
     with open(os.path.join(ckpt_dir, LINEAGE), "w") as f:
         json.dump(lineage, f, indent=1, default=str)
@@ -129,12 +114,10 @@ def resume_or_compute(
     config_hash: str,
     fn: Callable[[], DataFrame],
     inputs: list[str] | None = None,
-    partition_by: list[str] | None = None,
 ) -> tuple[DataFrame, bool]:
     """Returns (df, resumed). ``resumed=True`` means the checkpoint was read
     instead of recomputing the stage."""
-    if checkpoint_valid(ckpt_dir, config_hash, inputs, stage=stage):
-        return spark.read.parquet(os.path.join(ckpt_dir, "data")), True
-    df = fn()
-    write_checkpoint(df, ckpt_dir, stage, config_hash, inputs, partition_by)
-    return spark.read.parquet(os.path.join(ckpt_dir, "data")), False
+    resumed = checkpoint_valid(ckpt_dir, config_hash, inputs, stage=stage)
+    if not resumed:
+        write_checkpoint(fn(), ckpt_dir, stage, config_hash, inputs)
+    return spark.read.parquet(os.path.join(ckpt_dir, "data")), resumed

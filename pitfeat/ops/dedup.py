@@ -7,7 +7,8 @@ Four families, each scale-designed:
 - MinHash + LSH: shingle -> K minhashes -> B bands; candidate pairs come from
   a self-join on (band, band_hash) buckets, NEVER an all-pairs product. All
   hashing is Catalyst (xxhash64 + transform), so the signature build is
-  JVM-side; verification of candidates computes exact Jaccard on shingle sets.
+  JVM-side; verification of candidates computes exact Jaccard on shingle sets
+  as |A∩B| / (|A|+|B|-|A∩B|), after an exact length-ratio prefilter.
 - SimHash: 64-bit signature from per-shingle hash bit votes; near-dups are
   pairs within Hamming distance d, found via 4-segment LSH partitioning
   (pigeonhole: d<=3 guarantees one equal 16-bit segment).
@@ -308,10 +309,13 @@ def minhash_lsh_pairs(
 
     Candidates: docs sharing any LSH band bucket, with buckets larger than
     ``max_bucket`` dropped (see _drop_hot_buckets — the O(n^2) guard).
-    Verification: exact Jaccard over 64-bit-hashed shingle sets via
-    array_intersect/union sizes (JVM-side; see _shingle_hash_udf for the
-    collision math). ``sig_path``: where to materialize the signature table —
-    REQUIRED on a cluster (shared storage); defaults to a local temp dir with
+    Verification: exact Jaccard over 64-bit-hashed shingle sets (JVM-side;
+    see _shingle_hash_udf for the collision math): pairs whose size ratio
+    min(|A|,|B|)/max(|A|,|B|) is below the threshold are dropped first (it
+    bounds the Jaccard), and the rest score |A∩B| / (|A|+|B|-|A∩B|) from
+    the array_intersect size — the sets are distinct by construction.
+    ``sig_path``: where to materialize the signature table — REQUIRED on a
+    cluster (shared storage); defaults to a local temp dir with
     exit cleanup on local[*] masters only (see _scratch_dir).
     ``small_corpus_rows`` / ``small_corpus_bytes``: the fast path broadcasts
     the WHOLE corpus's shingle arrays instead of writing a candidate-shingle

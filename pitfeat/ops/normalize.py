@@ -53,16 +53,22 @@ class MinMaxStats:
         }
 
 
-def compute_minmax(df: DataFrame, cols: list[str]) -> MinMaxStats:
-    """A2: global per-column min/max in ONE job. min/max ignore NULL and NaN
-    (Spark semantics: NaN sorts greater than any value — exclude it explicitly
-    so a single NaN doesn't become the max)."""
+def minmax_aggs(cols: list[str]) -> list:
+    """The min/max aggregates behind every min-max stats pass, aliased
+    ``__mn_<c>`` / ``__mx_<c>``. min/max ignore NULL and NaN (Spark
+    semantics: NaN sorts greater than any value — exclude it explicitly so a
+    single NaN doesn't become the max)."""
     aggs = []
     for c in cols:
         clean = F.when(~F.isnan(F.col(c)), F.col(c))
         aggs.append(F.min(clean).alias(f"__mn_{c}"))
         aggs.append(F.max(clean).alias(f"__mx_{c}"))
-    row = df.agg(*aggs).collect()[0].asDict()
+    return aggs
+
+
+def compute_minmax(df: DataFrame, cols: list[str]) -> MinMaxStats:
+    """A2: global per-column min/max (``minmax_aggs``) in ONE job."""
+    row = df.agg(*minmax_aggs(cols)).collect()[0].asDict()
     return MinMaxStats(
         mins={c: row[f"__mn_{c}"] for c in cols},
         maxs={c: row[f"__mx_{c}"] for c in cols},
@@ -300,18 +306,13 @@ def normalize_minmax_grouped(
             f"normalize_minmax_grouped: column(s) {sorted(overlap)} appear in "
             "both cols and by"
         )
-    aggs = []
+    out = _grouped_stats_join(df, by, minmax_aggs(cols), broadcast_stats)
     for c in cols:
-        clean = F.when(~F.isnan(F.col(c)), F.col(c))
-        aggs.append(F.min(clean).alias(f"__gmn_{c}"))
-        aggs.append(F.max(clean).alias(f"__gmx_{c}"))
-    out = _grouped_stats_join(df, by, aggs, broadcast_stats)
-    for c in cols:
-        mn, mx = F.col(f"__gmn_{c}"), F.col(f"__gmx_{c}")
+        mn, mx = F.col(f"__mn_{c}"), F.col(f"__mx_{c}")
         out = out.withColumn(
             c, F.when(mx > mn, (F.col(c) - mn) / (mx - mn))
         )
-    return out.drop(*[f"__gmn_{c}" for c in cols], *[f"__gmx_{c}" for c in cols])
+    return out.drop(*[f"__mn_{c}" for c in cols], *[f"__mx_{c}" for c in cols])
 
 
 def normalize_zscore_grouped(

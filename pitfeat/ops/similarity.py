@@ -13,6 +13,13 @@ pair-join implementations (``_*_pairjoin``) are retained as parity oracles
 only. Near-dup pair mining (``embedding_near_dup_pairs``) stays bucketed
 (written assignment table, hot-bucket cap) with an Arrow pair-cosine
 verify kernel.
+
+Every Python-side vector decode — the arrow_udf kernels, the mapInArrow
+engine pass, the applyInArrow knn kernels and the driver-side query /
+k-means fetches — goes through ONE helper, ``_vectors``: Arrow list column
+in, zero-padded float64 matrix + validity mask out, read straight from the
+flat values buffer. The null/ragged rule is written there once; no pandas
+UDF runs in this module.
 """
 
 from __future__ import annotations
@@ -31,6 +38,49 @@ import threading as _threading
 
 _LIVE_QUERY_BCASTS: list = []
 _LIVE_QUERY_BCASTS_LOCK = _threading.Lock()
+
+
+def _vectors(arr, dim: int):
+    """Arrow list column (chunked, or a slice with a nonzero offset) ->
+    ``(V, ok)``: a zero-padded C-contiguous (n, dim) float64 matrix and its
+    validity mask. The ONE statement of the vector validity rule — not null
+    and exactly ``dim`` elements; invalid rows stay all-zero. Reads the flat
+    values buffer through the offsets, never boxing a row; null elements
+    inside a valid vector become NaN. V may be a read-only view of the
+    Arrow buffer."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        # combine_chunks copies even a single chunk
+        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
+    off = arr.offsets.to_numpy()
+    n = len(arr)
+    flat = (
+        arr.values.slice(off[0], off[-1] - off[0])
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64, copy=False)
+    )
+    ok = np.diff(off) == dim
+    if arr.null_count:
+        ok &= arr.is_valid().to_numpy(zero_copy_only=False)
+    if ok.all():
+        return flat.reshape(n, dim), ok
+    V = np.zeros((n, dim))
+    V[ok] = flat[(off[:-1][ok] - off[0])[:, None] + np.arange(dim)]
+    return V, ok
+
+
+def _list_array(M):
+    """(n, w) numpy -> Arrow list array of the n length-w rows: an
+    arrow_udf's array<...> result, built from the flat buffer."""
+    import numpy as np
+    import pyarrow as pa
+
+    n, w = M.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, (n + 1) * w, w, dtype=np.int32)), pa.array(M.ravel())
+    )
 
 
 def _dot(a, b):
@@ -143,21 +193,19 @@ def _query_matrix(queries: DataFrame, query_id_col: str, vec_col: str, dim: int)
     a sanity backstop, not the design point: for corpus-vs-corpus top-k use
     knn_join (bucketed, never collects the corpus), and for threshold pairs
     embedding_near_dup_pairs."""
-    import numpy as np
-
     # rows AND bytes gate (ADVICE r5): the byte cap keeps the collected
     # matrix inside the driver/broadcast budget at ANY dim
     max_rows = min(MAX_ENGINE_QUERIES, MAX_ENGINE_QUERY_BYTES // max(dim * 8, 1))
-    # Arrow-batched fetch (toPandas), not collect(): Row objects carry ~3x
+    # Arrow-batched fetch (toArrow), not collect(): Row objects carry ~3x
     # the payload in Python overhead, which at the 1M-query cap is the
     # difference between ~0.5 GB and ~1.5 GB of driver memory
-    pdf = (
+    tab = (
         queries.select(F.col(query_id_col).alias("__qid"),
                        F.col(vec_col).cast("array<double>").alias("__qv"))
         .limit(max_rows + 1)
-        .toPandas()
+        .toArrow()
     )
-    if len(pdf) > max_rows:
+    if tab.num_rows > max_rows:
         raise ValueError(
             f"matrix top-k engine: query set exceeds {max_rows} rows "
             f"(= min(row cap {MAX_ENGINE_QUERIES}, byte cap "
@@ -166,14 +214,8 @@ def _query_matrix(queries: DataFrame, query_id_col: str, vec_col: str, dim: int)
             "broadcast; use knn_join for corpus-vs-corpus top-k, or "
             "embedding_near_dup_pairs for threshold pairs"
         )
-    qids, vecs, ok = [], [], []
-    for qid, v in zip(pdf["__qid"], pdf["__qv"]):
-        valid = v is not None and len(v) == dim
-        qids.append(qid)
-        ok.append(valid)
-        vecs.append(np.asarray(v, dtype=np.float64) if valid else np.zeros(dim))
-    Q = np.vstack(vecs) if vecs else np.zeros((0, dim))
-    return qids, Q, np.array(ok, dtype=bool)
+    Q, ok = _vectors(tab.column("__qv"), dim)
+    return tab.column("__qid").to_pylist(), Q, ok
 
 
 def _matrix_topk(
@@ -188,7 +230,7 @@ def _matrix_topk(
     qmat=None,
     query_block: int | None = None,
 ) -> DataFrame:
-    """Matrix-scored top-k: one mapInPandas pass over the corpus, per-query
+    """Matrix-scored top-k: one mapInArrow pass over the corpus, per-query
     per-partition top-k inside the kernel, global rank over the survivors.
 
     ``cand_masker(V, ok) -> block_fn`` restricts scoring to bucket/list
@@ -215,8 +257,9 @@ def _matrix_topk(
     final rank shuffles ~partitions x nq x k rows regardless of corpus size.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     qids, Q, _q_ok = (
         qmat if qmat is not None else _query_matrix(queries, query_id_col, vec_col, dim)
@@ -270,6 +313,7 @@ def _matrix_topk(
         _LIVE_QUERY_BCASTS.append(bc)
 
     src = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
+    arrow_schema = to_arrow_schema(out_schema)
 
     def kernel(batches):
         qids, Q, Qn = bc.value
@@ -291,24 +335,18 @@ def _matrix_topk(
             buf_ids[qi] = [np.asarray([bi[j] for j in order], dtype=bi.dtype)]
             buf_n[qi] = len(order)
 
-        for full_pdf in batches:
+        for batch in batches:
           # r8: process each Arrow batch in bounded row slices — the session
           # IPC batch grew to 32k rows for the streaming kernels' sake, but
           # THIS kernel's per-query temporaries (V * Q[j]) scale with the
           # row count, so a 32k-row slice would blow the temp working set
           # from 2 MB to 16 MB per query and fall out of cache. Per-row
           # math: results are identical at any slicing.
-          for s0 in range(0, len(full_pdf), 4096):
-            pdf = full_pdf.iloc[s0 : s0 + 4096]
-            n = len(pdf)
-            if n == 0:
-                continue
-            raw = pdf["__v"].to_numpy()
-            ok = np.array([v is not None and len(v) == dim for v in raw], dtype=bool)
-            V = np.zeros((n, dim), dtype=np.float64)
-            if ok.any():
-                V[ok] = np.vstack([np.asarray(v, dtype=np.float64) for v in raw[ok]])
-            ids = pdf[id_col].to_numpy()
+          for s0 in range(0, batch.num_rows, 4096):
+            part = batch.slice(s0, 4096)
+            n = part.num_rows
+            V, ok = _vectors(part.column("__v"), dim)
+            ids = part.column(id_col).to_numpy(zero_copy_only=False)
             vn = np.sqrt(np.add.reduce(V * V, axis=1))
             # per-batch corpus-side masker prep (signatures / list
             # assignment) runs ONCE; only the tiny query-block mask below
@@ -354,9 +392,11 @@ def _matrix_topk(
             rows_q.extend(qids[qi] for _ in range(len(c)))
             rows_i.extend(bi.tolist())
             rows_c.extend(float(x) for x in c)
-        yield pd.DataFrame({query_id_col: rows_q, id_col: rows_i, "cosine": rows_c})
+        yield pa.RecordBatch.from_pydict(
+            {query_id_col: rows_q, id_col: rows_i, "cosine": rows_c}, schema=arrow_schema
+        )
 
-    return _rank_topk(src.mapInPandas(kernel, schema=out_schema), k, id_col, query_id_col)
+    return _rank_topk(src.mapInArrow(kernel, schema=out_schema), k, id_col, query_id_col)
 
 
 def cosine_topk(
@@ -447,16 +487,20 @@ def lsh_signatures(
     return df.withColumn("lsh_bucket", sig)
 
 
-def _sigs_np(V_ok, H, nbits: int, tables: int):
-    """(n, dim) float64 -> (n, tables) int64 per-table bucket ids. The ONE
-    definition of the signature math — used by the executor-side Arrow
+def _sigs_np(V, ok, H, nbits: int, tables: int):
+    """(n, dim) float64 + validity mask (from _vectors) -> (n, tables) int64
+    per-table bucket ids; invalid rows hash to bucket 0 in every table. The
+    ONE definition of the signature math — used by the executor-side Arrow
     kernel AND by the driver-side query bucketing of the matrix top-k
     engine, so the two can never drift."""
     import numpy as np
 
-    weights = (np.int64(1) << np.arange(nbits, dtype=np.int64))[None, None, :]
-    bits = (V_ok @ H) >= 0.0  # (n, tables*nbits)
-    return ((bits.reshape(-1, tables, nbits).astype(np.int64)) * weights).sum(axis=2)
+    sigs = np.zeros((len(V), tables), dtype=np.int64)
+    if ok.any():
+        weights = (np.int64(1) << np.arange(nbits, dtype=np.int64))[None, None, :]
+        bits = (V[ok] @ H) >= 0.0  # (n_ok, tables*nbits)
+        sigs[ok] = ((bits.reshape(-1, tables, nbits).astype(np.int64)) * weights).sum(axis=2)
+    return sigs
 
 
 def _table_sigs_udf(nbits: int, tables: int, dim: int, seed: int):
@@ -476,28 +520,14 @@ def _table_sigs_udf(nbits: int, tables: int, dim: int, seed: int):
     corpora — asserted by tests/test_kernels.py). Null/ragged vectors hash to
     bucket 0 in every table, mirroring the expression path's null semantics.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     H = _hyperplane_matrix(dim, nbits, tables, seed).T  # (dim, tables*nbits)
 
     def kernel(vecs):
-        n = len(vecs)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        raw = vecs.to_numpy()
-        ok = np.array(
-            [v is not None and len(v) == dim for v in raw], dtype=bool
-        )
-        sigs = np.zeros((n, tables), dtype=np.int64)
-        if ok.any():
-            V = np.vstack([np.asarray(v, dtype=np.float64) for v in raw[ok]])
-            sigs[ok] = _sigs_np(V, H, nbits, tables)
-        return pd.Series(list(sigs))
+        return _list_array(_sigs_np(*_vectors(vecs, dim), H, nbits, tables))
 
-    kernel.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "array<long>")
+    return arrow_udf(kernel, "array<long>")
 
 
 def _multi_table_buckets(
@@ -555,19 +585,13 @@ def lsh_topk(
     signatures + masked scores, and no xTables explode or pair rows ever
     materialize. Recall < 1.0 by design; raise ``tables`` (recall) or
     ``nbits`` (precision/cost), or fall back to cosine_topk for exactness."""
-    import numpy as np
-
     H = _hyperplane_matrix(dim, nbits, tables, seed).T  # (dim, tables*nbits)
     qmat = _query_matrix(queries, query_id_col, vec_col, dim)
-    qids, Q, q_ok = qmat
-    qsigs = np.zeros((len(qids), tables), dtype=np.int64)
-    if q_ok.any():
-        qsigs[q_ok] = _sigs_np(Q[q_ok], H, nbits, tables)
+    _, Q, q_ok = qmat
+    qsigs = _sigs_np(Q, q_ok, H, nbits, tables)
 
     def masker(V, ok):
-        sigs = np.zeros((len(V), tables), dtype=np.int64)
-        if ok.any():
-            sigs[ok] = _sigs_np(V[ok], H, nbits, tables)
+        sigs = _sigs_np(V, ok, H, nbits, tables)
 
         # candidate iff same bucket in the SAME table, any table; evaluated
         # per query block so the boolean temp is (n, block, tables), never
@@ -618,36 +642,22 @@ def _pair_cosine_udf(dim: int):
     (np.add.reduce), so values are bit-stable across batch shapes like the
     matrix engine's. Null/ragged pairs score 0.0 — same observable
     behavior as the HOF path at any positive threshold (HOF yields NULL for
-    ragged and 0.0 for null inputs; both fail `cosine >= threshold`)."""
+    ragged and 0.0 for null inputs; both fail `cosine >= threshold`): an
+    invalid side decodes to a zero row, whose zero denominator scores 0.0."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
     def kernel(va, vb):
-        n = len(va)
-        out = np.zeros(n, dtype=np.float64)
-        if n == 0:
-            return pd.Series(out)
-        ra, rb = va.to_numpy(), vb.to_numpy()
-        ok = np.array(
-            [
-                a is not None and b is not None and len(a) == dim and len(b) == dim
-                for a, b in zip(ra, rb)
-            ],
-            dtype=bool,
+        A, _ = _vectors(va, dim)
+        B, _ = _vectors(vb, dim)
+        dots = np.add.reduce(A * B, axis=1)
+        denom = np.sqrt(np.add.reduce(A * A, axis=1)) * np.sqrt(
+            np.add.reduce(B * B, axis=1)
         )
-        if ok.any():
-            A = np.vstack([np.asarray(a, dtype=np.float64) for a in ra[ok]])
-            B = np.vstack([np.asarray(b, dtype=np.float64) for b in rb[ok]])
-            dots = np.add.reduce(A * B, axis=1)
-            denom = np.sqrt(np.add.reduce(A * A, axis=1)) * np.sqrt(
-                np.add.reduce(B * B, axis=1)
-            )
-            out[ok] = np.where(denom > 0, dots / np.where(denom > 0, denom, 1.0), 0.0)
-        return pd.Series(out)
+        return pa.array(np.where(denom > 0, dots / np.where(denom > 0, denom, 1.0), 0.0))
 
-    kernel.__annotations__ = {"va": pd.Series, "vb": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "double")
+    return arrow_udf(kernel, "double")
 
 
 def embedding_near_dup_pairs(
@@ -762,22 +772,20 @@ def _kmeans_centroids(
     )
     # Pass 2 — fetch exactly the sample rows (hash <= cut), Arrow-batched.
     # Hash ties at the cut can push the frame a hair past sample_cap; the
-    # deterministic (hash, id) sort + head trims them reproducibly.
-    pdf = (
+    # deterministic (hash, id) sort + slice trims them reproducibly.
+    tab = (
         corpus.select(
             F.col(id_col).cast("string").alias("__id"),
             F.col(vec_col).cast("array<double>").alias("__v"),
             h.alias("__h"),
         )
         .where(F.col("__h") <= F.lit(cut))
-        .toPandas()
-        .sort_values(["__h", "__id"], kind="mergesort", ignore_index=True)
-        .head(sample_cap)
+        .toArrow()
+        .sort_by([("__h", "ascending"), ("__id", "ascending")])
+        .slice(0, sample_cap)
     )
-    V = np.array(
-        [v for v in pdf["__v"] if v is not None and len(v) == dim],
-        dtype=np.float64,
-    )
+    V, ok = _vectors(tab.column("__v"), dim)
+    V = V[ok]
     if len(V) < nlist:
         raise ValueError(f"IVF needs >= nlist={nlist} sample vectors, got {len(V)}")
     norms = np.linalg.norm(V, axis=1, keepdims=True)
@@ -796,17 +804,22 @@ def _kmeans_centroids(
     return C
 
 
-def _probe_np(V_ok, CT, nprobe: int):
-    """(n, dim) float64 -> (n, nprobe) int32 nearest-centroid list ids
-    (argsort desc, stable: ties resolve to the lower list id). The ONE
+def _probe_np(V, ok, CT, nprobe: int):
+    """(n, dim) float64 + validity mask (from _vectors) -> (n, nprobe) int32
+    nearest-centroid list ids (argsort desc, stable: ties resolve to the
+    lower list id); invalid rows go to list 0 in every slot. The ONE
     definition of the probe math — shared by the executor kernel and the
     driver-side query probing of the matrix top-k engine."""
     import numpy as np
 
-    dots = V_ok @ CT  # (n, nlist)
-    if nprobe == 1:
-        return np.argmax(dots, axis=1).astype(np.int32).reshape(-1, 1)
-    return np.argsort(-dots, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
+    out = np.zeros((len(V), nprobe), dtype=np.int32)
+    if ok.any():
+        dots = V[ok] @ CT  # (n_ok, nlist)
+        if nprobe == 1:
+            out[ok] = np.argmax(dots, axis=1).reshape(-1, 1)
+        else:
+            out[ok] = np.argsort(-dots, axis=1, kind="stable")[:, :nprobe]
+    return out
 
 
 def _ivf_lists_udf(C, dim: int, nprobe: int):
@@ -815,26 +828,14 @@ def _ivf_lists_udf(C, dim: int, nprobe: int):
     centroids ship as ONE broadcast numpy matrix in the closure — the same
     no-literal-plan-tree discipline as _table_sigs_udf). Null/ragged vectors
     go to list 0, mirroring the LSH null semantics."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     CT = C.T.copy()  # (dim, nlist)
 
     def kernel(vecs):
-        n = len(vecs)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        raw = vecs.to_numpy()
-        ok = np.array([v is not None and len(v) == dim for v in raw], dtype=bool)
-        out = np.zeros((n, nprobe), dtype=np.int32)
-        if ok.any():
-            V = np.vstack([np.asarray(v, dtype=np.float64) for v in raw[ok]])
-            out[ok] = _probe_np(V, CT, nprobe)
-        return pd.Series(list(out))
+        return _list_array(_probe_np(*_vectors(vecs, dim), CT, nprobe))
 
-    kernel.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "array<int>")
+    return arrow_udf(kernel, "array<int>")
 
 
 def ivf_topk(
@@ -876,15 +877,11 @@ def ivf_topk(
     )
     CT = np.asarray(C, dtype=np.float64).T.copy()  # (dim, nlist)
     qmat = _query_matrix(queries, query_id_col, vec_col, dim)
-    qids, Q, q_ok = qmat
-    qprobes = np.zeros((len(qids), nprobe), dtype=np.int32)
-    if q_ok.any():
-        qprobes[q_ok] = _probe_np(Q[q_ok], CT, nprobe)
+    _, Q, q_ok = qmat
+    qprobes = _probe_np(Q, q_ok, CT, nprobe)
 
     def masker(V, ok):
-        clist = np.zeros(len(V), dtype=np.int32)
-        if ok.any():
-            clist[ok] = _probe_np(V[ok], CT, 1)[:, 0]
+        clist = _probe_np(V, ok, CT, 1)[:, 0]
 
         # candidate iff the row's inverted list is among the query's probes;
         # per-block so the temp is (n, block, nprobe), never (n, nq, nprobe)
@@ -1190,7 +1187,7 @@ def knn_join(
       nothing gets — it must not be the silently-bad configuration.
     - ``lsh``: multi-table hyperplane buckets
       (_table_sigs_udf — the s2/s3 math); ONE groupBy(table, bucket) +
-      applyInPandas kernel scores each bucket's members against each other
+      applyInArrow kernel scores each bucket's members against each other
       and keeps per-member top-k in-kernel; global rank merges the <= n x
       tables x k candidates. Never all-pairs; recall < 1.0 by design.
       Corpus-KNN needs COARSE buckets — every row is a query, so a row
@@ -1224,8 +1221,9 @@ def knn_join(
       bucketed paths; hard-capped by MAX_ENGINE_QUERIES.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if method not in ("lsh", "ivf", "exact"):
         raise ValueError(f"method must be lsh|ivf|exact, got {method!r}")
@@ -1268,35 +1266,24 @@ def knn_join(
         ]
     )
 
+    arrow_schema = to_arrow_schema(out_schema)
+
     def _prep_arrow(tab, idc: str, vc: str):
-        """Arrow table -> (ids, V, Vn), id-sorted. The vector column is a
-        list<double> whose flat values buffer converts to numpy ZERO-COPY
-        and reshapes to (n, dim) — no per-row object arrays, the reason the
-        ivf cogroup runs applyInArrow instead of applyInPandas (r8: the
-        pandas group conversion of n x nprobe vector rows cost ~1/3 of the
-        whole stage). Rows are pre-validated upstream (non-null, len==dim),
-        so flatten() is exactly n*dim values in row order."""
+        """Arrow table -> (ids, V, Vn), id-sorted. Rows are pre-validated
+        upstream (``valid``), so every vector decodes."""
         ids = tab.column(idc).to_numpy(zero_copy_only=False)
-        col = tab.column(vc)
-        arr = col.combine_chunks() if col.num_chunks != 1 else col.chunk(0)
-        flat = arr.flatten().to_numpy(zero_copy_only=False)
-        V = np.ascontiguousarray(flat.reshape(len(ids), dim).astype(np.float64, copy=False))
+        V, _ = _vectors(tab.column(vc), dim)
         order = np.argsort(ids, kind="stable")
         if not np.array_equal(order, np.arange(len(ids))):
             ids, V = ids[order], V[order]
         Vn = np.sqrt(np.add.reduce(V * V, axis=1))
         return ids, V, Vn
 
-    def _prep(pdf: pd.DataFrame, idc: str = id_col, vc: str = "__v"):
-        pdf = pdf.sort_values(idc, kind="mergesort", ignore_index=True)
-        # rows arrive as float64 ndarrays from Arrow (cast upstream); vstack
-        # them directly — the per-element asarray() wrapper doubled the
-        # conversion cost on 50k+-row groups for a dtype that is already right
-        V = np.vstack(pdf[vc].to_numpy())
-        if V.dtype != np.float64:
-            V = V.astype(np.float64)
-        Vn = np.sqrt(np.add.reduce(V * V, axis=1))
-        return pdf[idc].to_numpy(), V, Vn
+    def _cands(oq=(), oi=(), oc=()):
+        """Kernel output table (id, nbr_id, cosine); no arguments = empty."""
+        return pa.Table.from_pydict(
+            {id_col: oq, "nbr_id": oi, "cosine": oc}, schema=arrow_schema
+        )
 
     if method == "lsh":
         assigned = _multi_table_buckets(valid, "__v", nbits, tables, dim, seed)
@@ -1305,16 +1292,15 @@ def knn_join(
 
             assigned = _drop_hot_buckets(assigned, ["tbl", "bucket"], max_bucket)
 
-        def bucket_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) < 2:
-                return pd.DataFrame({id_col: [], "nbr_id": [], "cosine": []})
-            ids, V, Vn = _prep(pdf)
-            oq, oi, oc = _knn_score_block(V, Vn, ids, V, Vn, ids, k)
-            return pd.DataFrame({id_col: oq, "nbr_id": oi, "cosine": oc})
+        def bucket_kernel(tab):
+            if tab.num_rows < 2:
+                return _cands()
+            ids, V, Vn = _prep_arrow(tab, id_col, "__v")
+            return _cands(*_knn_score_block(V, Vn, ids, V, Vn, ids, k))
 
         cands = (
             assigned.groupBy("tbl", "bucket")
-            .applyInPandas(bucket_kernel, schema=out_schema)
+            .applyInArrow(bucket_kernel, schema=out_schema)
         )
         return _knn_rank(cands, k, id_col)
 
@@ -1337,32 +1323,13 @@ def knn_join(
         F.col("__v").alias("__qv"),
         F.explode(_ivf_lists_udf(C, dim, nprobe)(F.col("__v"))).alias("__qlist"),
     )
-    import pyarrow as pa
 
-    def list_kernel(mtab: "pa.Table", ptab: "pa.Table") -> "pa.Table":
-        it = (
-            mtab.schema.field(id_col).type
-            if mtab.num_rows
-            else ptab.schema.field("__qid").type
-        )
+    def list_kernel(mtab, ptab):
         if mtab.num_rows == 0 or ptab.num_rows == 0:
-            return pa.table(
-                {
-                    id_col: pa.array([], type=it),
-                    "nbr_id": pa.array([], type=it),
-                    "cosine": pa.array([], type=pa.float64()),
-                }
-            )
+            return _cands()
         ids, V, Vn = _prep_arrow(mtab, id_col, "__v")
         qids, QV, QVn = _prep_arrow(ptab, "__qid", "__qv")
-        oq, oi, oc = _knn_score_block(V, Vn, ids, QV, QVn, qids, k)
-        return pa.table(
-            {
-                id_col: pa.array(oq, type=it),
-                "nbr_id": pa.array(oi, type=it),
-                "cosine": pa.array(np.asarray(oc, dtype=np.float64), type=pa.float64()),
-            }
-        )
+        return _cands(*_knn_score_block(V, Vn, ids, QV, QVn, qids, k))
 
     splits, n_cells = _ivf_grid_splits(valid, C, dim, nprobe, max_bucket, max_probers)
     # Pre-partition both cogroup sides over ~4x the cell count (r8): the

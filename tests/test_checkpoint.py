@@ -3,6 +3,7 @@
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from pitfeat.checkpoint import checkpoint_valid, resume_or_compute, write_checkpoint
@@ -19,6 +20,34 @@ def test_checkpoint_roundtrip_and_lineage(spark, transcripts, tmp_path):
     assert not checkpoint_valid(ck, "cfg123", ["in:b"])  # input change invalidates
     back = spark.read.parquet(os.path.join(ck, "data"))
     assert back.count() == transcripts.count()
+    # per-partition metrics come from the written files: each pid names a
+    # part file under data/ whose Parquet footer holds exactly ``rows``
+    for p in lin["partitions"]:
+        path = os.path.join(ck, "data", p["pid"])
+        assert os.path.isfile(path)
+        assert pq.read_metadata(path).num_rows == p["rows"]
+
+    # ... and cost no Spark job beyond the write itself
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs(
+        "ck-plain-write",
+        lambda: transcripts.write.mode("overwrite").parquet(str(tmp_path / "plain")),
+    )
+    ckpt = jobs(
+        "ck-checkpoint-write",
+        lambda: write_checkpoint(transcripts, str(tmp_path / "ck1b"), "stage1", "cfg123"),
+    )
+    assert 1 <= ckpt <= plain
 
 
 def test_resume_short_circuits(spark, transcripts, tmp_path):

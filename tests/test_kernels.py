@@ -227,22 +227,110 @@ def test_lsh_kernel_matches_expression_signatures(spark):
         pd.testing.assert_frame_equal(got, want)
 
 
-def test_lsh_kernel_null_and_ragged_rows(spark):
-    """Null / wrong-width vectors hash to bucket 0 in every table — the same
-    bucket the expression path's null-propagating dot products produce."""
+def _lsh_buckets(df):
     from pitfeat.ops.similarity import _multi_table_buckets
 
-    rows = [(0, [0.5, -1.0, 2.0, 0.25]), (1, None), (2, [1.0, 2.0])]
-    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    out = (
-        _multi_table_buckets(df, "v", 4, 3, 4, 7)
-        .select("vec_id", "tbl", "bucket")
-        .toPandas()
-        .sort_values(["vec_id", "tbl"])
+    return _multi_table_buckets(df, "v", 4, 3, 4, 7).select("vec_id", F.col("bucket").alias("out"))
+
+
+def _ivf_lists(df):
+    import numpy as np
+
+    from pitfeat.ops.similarity import _ivf_lists_udf
+
+    lists = _ivf_lists_udf(np.eye(3, 4), 4, 2)(F.col("v"))
+    return df.select("vec_id", F.explode(lists).alias("out"))
+
+
+def _pair_cosines(df):
+    from pitfeat.ops.similarity import _pair_cosine_udf
+
+    ref = df.where(F.col("vec_id") == 0).select(F.col("v").alias("w"))
+    return df.crossJoin(ref).select(
+        "vec_id", _pair_cosine_udf(4)(F.col("v"), F.col("w")).alias("out")
     )
-    assert (out.loc[out.vec_id == 1, "bucket"] == 0).all()
-    assert (out.loc[out.vec_id == 2, "bucket"] == 0).all()
-    assert len(out) == 9  # 3 rows x 3 tables
+
+
+@pytest.mark.parametrize(
+    "kernel, per_row",
+    [(_lsh_buckets, 3), (_ivf_lists, 2), (_pair_cosines, 1)],
+    ids=["lsh", "ivf_lists", "pair_cosine"],
+)
+def test_vector_kernel_null_and_ragged_rows(spark, kernel, per_row):
+    """Null / wrong-width vectors come out as the kernel's zero value — LSH
+    bucket 0 in every table (the bucket the expression path's
+    null-propagating dot products produce), IVF list 0 in every probe slot,
+    pair cosine 0.0 — while every row keeps its output slots."""
+    rows = [
+        (0, [0.5, -1.0, 2.0, 0.25]),
+        (1, None),
+        (2, [1.0, 2.0]),
+        (3, [1.0, 2.0, 3.0, 4.0, 5.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    out = kernel(df).toPandas()
+    assert len(out) == len(rows) * per_row
+    assert (out.loc[out.vec_id > 0, "out"] == 0).all()
+    if kernel is _pair_cosines:
+        assert out.loc[out.vec_id == 0, "out"].tolist() == [1.0]
+    if kernel is _ivf_lists:
+        assert out.loc[out.vec_id == 0, "out"].tolist() == [2, 0]
+
+
+def test_vectors_decoder_edge_rows():
+    """_vectors, the one Arrow vector decoder: null, empty, short and long
+    rows are invalid and decode to zero rows; a null element inside a
+    full-width vector keeps the row valid and decodes to NaN. Pinned on a
+    slice with a nonzero offset (what the engine's 4096-row slicing
+    produces), on a multi-chunk column, and on float32 lists."""
+    import numpy as np
+    import pyarrow as pa
+
+    from pitfeat.ops.similarity import _vectors
+
+    nan = float("nan")
+    rows = [
+        [1.0, 2.0, 3.0],
+        None,
+        [],
+        [4.0, 5.0],
+        [6.0, 7.0, 8.0, 9.0],
+        [1.5, None, -2.0],
+        [-1.0, 0.0, 0.5],
+    ]
+    want_ok = np.array([True, False, False, False, False, True, True])
+    want_V = np.array(
+        [[1, 2, 3], [0, 0, 0], [0, 0, 0], [0, 0, 0], [0, 0, 0], [1.5, nan, -2], [-1, 0, 0.5]],
+        dtype=np.float64,
+    )
+    pad = [[9.0, 9.0, 9.0], None, [9.0]]
+    cases = []
+    for typ in (pa.list_(pa.float64()), pa.list_(pa.float32())):
+        whole = pa.array(pad + rows + pad, type=typ)
+        cases += [
+            (whole.slice(len(pad), len(rows)), want_ok, want_V),
+            # all-valid slice: the zero-copy reshape path, still offset
+            (whole.slice(len(pad) + 5, 2), want_ok[5:], want_V[5:]),
+            (pa.chunked_array([whole.slice(len(pad), len(rows))]), want_ok, want_V),
+            (
+                pa.chunked_array([pa.array(rows[i:j], type=typ) for i, j in ((0, 3), (3, 5), (5, 7))]),
+                want_ok,
+                want_V,
+            ),
+            (pa.array([], type=typ), want_ok[:0], want_V[:0]),
+        ]
+    # Arrow lets a null slot span child values: it must still be invalid
+    spanning_null = pa.ListArray.from_arrays(
+        pa.array([0, 3, 6], type=pa.int32()),
+        pa.array([1.0, 2.0, 3.0, 4.0, 5.0, 6.0]),
+        mask=pa.array([False, True]),
+    )
+    cases.append((spanning_null, np.array([True, False]), np.array([[1.0, 2, 3], [0, 0, 0]])))
+    for arr, ok_exp, V_exp in cases:
+        V, ok = _vectors(arr, 3)
+        assert V.dtype == np.float64 and V.shape == V_exp.shape and V.flags.c_contiguous
+        np.testing.assert_array_equal(ok, ok_exp)
+        np.testing.assert_array_equal(V, V_exp)
 
 
 def test_knn_score_block_f32_prefilter_exact_selection():

@@ -80,10 +80,11 @@ def test_no_persisted_rdds_leak(spark, transcripts, snapshots):
 
 def test_ann_plans_have_no_rowwise_python(spark):
     """The matrix top-k engine (s1/s2/s4) must plan exactly ONE Arrow-batched
-    MapInPandas pass over the corpus — no pair rows, no xTables explode, no
-    row-at-a-time BatchEvalPython — plus a single exchange for the final
-    rank window. The retained pair-join parity oracles keep their r3 shape
-    (ArrowEvalPython assignment kernels + broadcast query join)."""
+    MapInArrow pass over the corpus — no pair rows, no xTables explode, no
+    row-at-a-time BatchEvalPython, no pandas node — plus a single exchange
+    for the final rank window. The retained pair-join parity oracles keep
+    their r3 shape (ArrowEvalPython assignment kernels + broadcast query
+    join)."""
     import numpy as np
 
     from pitfeat.ops.similarity import (
@@ -106,7 +107,8 @@ def test_ann_plans_have_no_rowwise_python(spark):
     ):
         plan = _plan(out)
         assert "BatchEvalPython" not in plan
-        assert plan.count("MapInPandas") == 1, plan[:800]
+        assert "InPandas" not in plan, plan[:800]
+        assert plan.count("MapInArrow") == 1, plan[:800]
         assert plan.count("Exchange") <= 1, plan[:800]  # only the rank window
     for out in (
         _lsh_topk_pairjoin(e, qs, k=5, nbits=1, tables=4),
@@ -120,7 +122,7 @@ def test_ann_plans_have_no_rowwise_python(spark):
 
 def test_knn_join_plans_never_materialize_pairs(spark):
     """knn_join's bucketed paths (VERDICT r4 #3) must score inside grouped
-    Arrow kernels — FlatMapGroupsInPandas (lsh) / FlatMapCoGroupsInPandas
+    Arrow kernels — FlatMapGroupsInArrow (lsh) / FlatMapCoGroupsInArrow
     (ivf) — with NO cartesian/nested-loop join and no row-wise Python
     anywhere: pair rows exist only as the <= n x fanout x k kernel OUTPUT,
     never as a join product."""
@@ -136,9 +138,10 @@ def test_knn_join_plans_never_materialize_pairs(spark):
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "BatchEvalPython" not in plan
-    assert "FlatMapGroupsInPandas" in lsh_plan
-    # r8: the ivf cogroup kernel is Arrow-native (applyInArrow) — vectors
-    # reach numpy as one flat-buffer reshape instead of per-row objects
+        assert "InPandas" not in plan
+    # both kernels are Arrow-native (applyInArrow) — vectors reach numpy as
+    # one flat-buffer reshape instead of per-row objects
+    assert "FlatMapGroupsInArrow" in lsh_plan
     assert "FlatMapCoGroupsInArrow" in ivf_plan
 
 

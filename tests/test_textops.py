@@ -131,9 +131,9 @@ def test_quality_score_kernel_matches_expression_path(spark, docs):
         pd.testing.assert_series_equal(got[c], ref[c], check_exact=True)
 
 
-def test_lang_id_kernel_matches_expression_path(spark, docs):
-    """r8: lang_id's four marker-hit counts moved to a fused Arrow kernel;
-    this pins EXACT parity against the original pure-expression
+def test_lang_id_pins_expression_semantics(spark, docs):
+    """Pins lang_id's semantics for any future kernel rewrite (lang_id runs
+    on the expression path today): EXACT parity against the pure-expression
     formulation (the four interpreted HOF filters, replicated inline) on
     the corpus plus planted edge shapes: null text, empty,
     whitespace-only, padded, per-language marker runs, a cross-language
