@@ -1025,8 +1025,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # corpus-wide KNN (VERDICT r4 #3): every embedding's top-5 neighbors.
         # The exact method is the oracle-provable configuration (the SQL
         # brute-force self-join IS its definition); the bucketed scale paths
-        # are verified by s6_knn_ivf (tail: nprobe == nlist makes the cogroup
-        # kernel + candidate dedup + global rank exhaustive => same oracle)
+        # are verified by s6_knn_ivf (tail: nprobe == nlist makes the grouped
+        # cell kernel + global rank exhaustive => same oracle)
         # and by the clustered-recall pytest for real partial-probe shapes.
         e = _t(spark, sf, "embeddings")
         out = SIM.knn_join(e, k=5, method="exact")

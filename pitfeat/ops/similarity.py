@@ -15,8 +15,9 @@ only. Near-dup pair mining (``embedding_near_dup_pairs``) stays bucketed
 verify kernel.
 
 Every Python-side vector decode — the arrow_udf kernels, the mapInArrow
-engine pass, the applyInArrow knn kernels and the driver-side query /
-k-means fetches — goes through ONE helper, ``_vectors``: Arrow list column
+engine pass, the two groupBy().applyInArrow knn kernels (one group per LSH
+bucket, one per IVF grid cell) and the driver-side query / k-means fetches
+— goes through ONE helper, ``_vectors``: Arrow list column
 in, zero-padded float64 matrix + validity mask out, read straight from the
 flat values buffer. The null/ragged rule is written there once; no pandas
 UDF runs in this module.
@@ -807,14 +808,20 @@ def _kmeans_centroids(
 def _probe_np(V, ok, CT, nprobe: int):
     """(n, dim) float64 + validity mask (from _vectors) -> (n, nprobe) int32
     nearest-centroid list ids (argsort desc, stable: ties resolve to the
-    lower list id); invalid rows go to list 0 in every slot. The ONE
-    definition of the probe math — shared by the executor kernel and the
-    driver-side query probing of the matrix top-k engine."""
+    lower list id; a NaN score ranks below every number); invalid rows go
+    to list 0 in every slot. The ONE definition of the probe math — shared
+    by the executor kernel and the driver-side query probing of the matrix
+    top-k engine. Slot 0 is the same list at every ``nprobe``: knn_join
+    reads it as the row's member list."""
     import numpy as np
 
     out = np.zeros((len(V), nprobe), dtype=np.int32)
     if ok.any():
         dots = V[ok] @ CT  # (n_ok, nlist)
+        # an inf element meeting a 0 centroid weight scores NaN, which argmax
+        # ranks FIRST and a descending argsort ranks LAST; as -inf both legs
+        # rank it last and keep the lower-id tie rule
+        np.copyto(dots, -np.inf, where=np.isnan(dots))
         if nprobe == 1:
             out[ok] = np.argmax(dots, axis=1).reshape(-1, 1)
         else:
@@ -836,6 +843,25 @@ def _ivf_lists_udf(C, dim: int, nprobe: int):
         return _list_array(_probe_np(*_vectors(vecs, dim), CT, nprobe))
 
     return arrow_udf(kernel, "array<int>")
+
+
+def _ivf_codebook(centroids, dim: int, nlist: int, nprobe: int):
+    """The IVF argument check shared by ivf_topk and knn_join, run at call
+    time so a bad codebook fails before any Spark job instead of inside a
+    Python worker. A given ``centroids`` must be a (lists, dim) matrix and
+    bounds ``nprobe`` by its row count; otherwise ``nlist`` does. Returns
+    the codebook as float64, or None when it is still to be trained."""
+    import numpy as np
+
+    C = None
+    if centroids is not None:
+        C = np.asarray(centroids, dtype=np.float64)
+        if C.ndim != 2 or C.shape[1] != dim:
+            raise ValueError(f"centroids must have shape (nlist, dim={dim}), got {C.shape}")
+        nlist = len(C)
+    if not 1 <= nprobe <= nlist:
+        raise ValueError(f"nprobe must be in [1, nlist={nlist}], got {nprobe}")
+    return C
 
 
 def ivf_topk(
@@ -866,16 +892,10 @@ def ivf_topk(
     product, never pair rows. Pass ``centroids`` (numpy (nlist, dim)) to
     reuse a trained codebook across calls/corpora — e.g. train once, assign
     daily increments."""
-    if not 1 <= nprobe <= nlist:
-        raise ValueError(f"nprobe must be in [1, nlist={nlist}], got {nprobe}")
-    import numpy as np
-
-    C = (
-        centroids
-        if centroids is not None
-        else _kmeans_centroids(corpus, vec_col, id_col, nlist, dim, seed)
-    )
-    CT = np.asarray(C, dtype=np.float64).T.copy()  # (dim, nlist)
+    C = _ivf_codebook(centroids, dim, nlist, nprobe)
+    if C is None:
+        C = _kmeans_centroids(corpus, vec_col, id_col, nlist, dim, seed)
+    CT = C.T.copy()  # (dim, nlist)
     qmat = _query_matrix(queries, query_id_col, vec_col, dim)
     _, Q, q_ok = qmat
     qprobes = _probe_np(Q, q_ok, CT, nprobe)
@@ -1199,8 +1219,10 @@ def knn_join(
       the kernel (the O(m^2 x dim) guard — members still pair via their
       other tables); the kernel is O(m^2 x dim) per bucket, ~1 s at the
       4096 default with dim 64.
-    - ``ivf``: members assigned to their nearest centroid's list, probers
-      exploded to their ``nprobe`` nearest lists, cogrouped per list —
+    - ``ivf``: ONE assignment pass posexplodes every row to its
+      ``nprobe`` nearest lists, nearest first; the row probes each of them
+      and is a member of the first. ONE groupBy((list, mblock, pblock)) +
+      applyInArrow kernel scores each cell's probers against its members —
       candidates are ~nprobe/nlist of the corpus per row, adapting to data
       clustering like ivf_topk. nprobe == nlist makes candidates exhaustive
       (the provable-recall contract configuration). Hot lists are NOT
@@ -1209,10 +1231,10 @@ def knn_join(
       lists over ``max_bucket`` members or ``max_probers`` probers are
       grid-split instead — members salted into ceil(mc/max_bucket) blocks
       by id hash, probers into ceil(pc/max_probers) blocks by id hash,
-      each side replicated across the OTHER side's blocks, cogrouped on
-      (list, mblock, pblock). Every (member, prober) pair lands in exactly
-      one cell, per-cell memory is bounded, and the union of per-cell
-      top-ks contains the true top-k — the standard blocked-matmul
+      each side copied, role-tagged, across the OTHER side's blocks; an
+      unsplit list is the 1 x 1 grid. Every (member, prober) pair lands in
+      exactly one cell, per-cell memory is bounded, and the union of
+      per-cell top-ks contains the true top-k — the standard blocked-matmul
       distribution, at the cost of members x p_blocks + probers x
       m_blocks row replication on the hot lists only.
     - ``exact``: the matrix engine with queries := the corpus (k+1 then
@@ -1268,16 +1290,17 @@ def knn_join(
 
     arrow_schema = to_arrow_schema(out_schema)
 
-    def _prep_arrow(tab, idc: str, vc: str):
-        """Arrow table -> (ids, V, Vn), id-sorted. Rows are pre-validated
-        upstream (``valid``), so every vector decodes."""
-        ids = tab.column(idc).to_numpy(zero_copy_only=False)
-        V, _ = _vectors(tab.column(vc), dim)
+    def _prep_arrow(tab):
+        """Kernel input table -> (ids, V, Vn, order), id-sorted; ``order``
+        is the sorting permutation of the table's rows. Rows are
+        pre-validated upstream (``valid``), so every vector decodes."""
+        ids = tab.column(id_col).to_numpy(zero_copy_only=False)
+        V, _ = _vectors(tab.column("__v"), dim)
         order = np.argsort(ids, kind="stable")
         if not np.array_equal(order, np.arange(len(ids))):
             ids, V = ids[order], V[order]
         Vn = np.sqrt(np.add.reduce(V * V, axis=1))
-        return ids, V, Vn
+        return ids, V, Vn, order
 
     def _cands(oq=(), oi=(), oc=()):
         """Kernel output table (id, nbr_id, cosine); no arguments = empty."""
@@ -1295,7 +1318,7 @@ def knn_join(
         def bucket_kernel(tab):
             if tab.num_rows < 2:
                 return _cands()
-            ids, V, Vn = _prep_arrow(tab, id_col, "__v")
+            ids, V, Vn, _ = _prep_arrow(tab)
             return _cands(*_knn_score_block(V, Vn, ids, V, Vn, ids, k))
 
         cands = (
@@ -1305,126 +1328,119 @@ def knn_join(
         return _knn_rank(cands, k, id_col)
 
     # ivf
-    if not 1 <= nprobe <= nlist:
-        raise ValueError(f"nprobe must be in [1, nlist={nlist}], got {nprobe}")
-    C = (
-        centroids
-        if centroids is not None
-        else _kmeans_centroids(df, vec_col, id_col, nlist, dim, seed)
+    C = _ivf_codebook(centroids, dim, nlist, nprobe)
+    if C is None:
+        C = _kmeans_centroids(df, vec_col, id_col, nlist, dim, seed)
+    splits, n_parts = _ivf_grid_splits(valid, id_col, C, dim, nprobe, max_bucket, max_probers)
+    # ONE assignment pass: each valid row once per probed list, nearest
+    # first. Every (row, list) is a prober there; pos 0 (the nearest list)
+    # also makes it a member.
+    lists = valid.select(
+        id_col,
+        "__v",
+        F.posexplode(_ivf_lists_udf(C, dim, nprobe)(F.col("__v"))).alias("__pos", "__list"),
     )
-    C = np.asarray(C, dtype=np.float64)
-    members = valid.withColumn(
-        "__list", F.element_at(_ivf_lists_udf(C, dim, 1)(F.col("__v")), 1)
-    )
-    # prober columns renamed: cogroup drops right-side columns whose names
-    # duplicate left-side ones (same hazard the asof cogroup documents)
-    probers = valid.select(
-        F.col(id_col).alias("__qid"),
-        F.col("__v").alias("__qv"),
-        F.explode(_ivf_lists_udf(C, dim, nprobe)(F.col("__v"))).alias("__qlist"),
-    )
-
-    def list_kernel(mtab, ptab):
-        if mtab.num_rows == 0 or ptab.num_rows == 0:
-            return _cands()
-        ids, V, Vn = _prep_arrow(mtab, id_col, "__v")
-        qids, QV, QVn = _prep_arrow(ptab, "__qid", "__qv")
-        return _cands(*_knn_score_block(V, Vn, ids, QV, QVn, qids, k))
-
-    splits, n_cells = _ivf_grid_splits(valid, C, dim, nprobe, max_bucket, max_probers)
-    # Pre-partition both cogroup sides over ~4x the cell count (r8): the
-    # cogroup otherwise lands n_cells grouping keys on
-    # spark.sql.shuffle.partitions reducers — at 64 lists x 32 partitions a
-    # balls-in-bins collision gives some tasks 3-4 cells (including hot
-    # ones) and leaves others empty, a pure straggler tax. An explicit
-    # hash-repartition on the SAME grouping keys satisfies the cogroup's
-    # clustered-distribution requirement, so Spark adds NO second exchange
-    # (plan-checked); spreading keys over 4x cells makes multi-cell tasks
-    # rare while empty partitions cost ~ms. Results are unaffected — cell
-    # composition is a pure function of the grouping keys.
-    n_parts = max(
-        valid.sparkSession.sparkContext.defaultParallelism, min(4 * n_cells, 4096)
-    )
-    if splits is not None:
-        # blocked self-KNN over hot lists (see the method docstring): block
-        # counts ship as a tiny broadcast-joined table — nlist rows, never a
-        # literal plan tree. Block membership is a pure hash of the row id,
-        # so cell composition (and the kernel's GEMM shapes) stay pure
-        # functions of the data — the cogroup determinism argument survives
-        # the split. Each (member, prober) pair meets in exactly one cell:
-        # (list, mhash(member), phash(prober)).
-        sdf = F.broadcast(splits)
-        members = (
-            members.join(sdf, members["__list"] == sdf["__l"], "inner")
-            .withColumn(
-                "__mb",
-                F.pmod(F.xxhash64(F.lit(seed + 101), F.col(id_col)), F.col("__ms")).cast("int"),
-            )
-            .withColumn("__pb", F.explode(F.sequence(F.lit(0), F.col("__ps") - F.lit(1))))
-            .drop("__l", "__ms", "__ps")
-        )
-        probers = (
-            probers.join(sdf, probers["__qlist"] == sdf["__l"], "inner")
-            .withColumn(
-                "__pb",
-                F.pmod(F.xxhash64(F.lit(seed + 103), F.col("__qid")), F.col("__ps")).cast("int"),
-            )
-            .withColumn("__mb", F.explode(F.sequence(F.lit(0), F.col("__ms") - F.lit(1))))
-            .drop("__l", "__ms", "__ps")
-        )
-        cands = (
-            members.repartition(n_parts, "__list", "__mb", "__pb")
-            .groupBy("__list", "__mb", "__pb")
-            .cogroup(
-                probers.repartition(n_parts, "__qlist", "__mb", "__pb").groupBy(
-                    "__qlist", "__mb", "__pb"
-                )
-            )
-            .applyInArrow(list_kernel, schema=out_schema)
-        )
+    if splits is None:
+        lists = lists.withColumn("__ms", F.lit(1)).withColumn("__ps", F.lit(1))
     else:
-        cands = (
-            members.repartition(n_parts, "__list")
-            .groupBy("__list")
-            .cogroup(probers.repartition(n_parts, "__qlist").groupBy("__qlist"))
-            .applyInArrow(list_kernel, schema=out_schema)
+        # block counts ship as a tiny broadcast table (nlist rows), never a
+        # literal plan tree
+        sdf = F.broadcast(splits)
+        lists = lists.join(sdf, lists["__list"] == sdf["__l"], "inner")
+    # Cells (list, mblock, pblock), role-tagged copies: a member lives in
+    # block mh = mhash(id) % ms of its list and is copied to every prober
+    # block; a prober lives in block ph = phash(id) % ps of each probed list
+    # and is copied to every member block. A pos-0 row's member copy and
+    # prober copy meet in cell (mh, ph) and ship there as ONE row with both
+    # roles, so an unsplit list (1 x 1 grid) ships each row exactly once.
+    # Copies j < ms are the prober copies (mblock j); copies j >= ms are the
+    # member copies in the other ps - 1 prober blocks. Block membership is a
+    # pure id hash, so cell composition (and the kernel's GEMM shapes) is a
+    # pure function of the data, and each (member, prober) pair meets in
+    # exactly one cell.
+    mh = F.pmod(F.xxhash64(F.lit(seed + 101), F.col(id_col)), F.col("__ms")).cast("int")
+    ph = F.pmod(F.xxhash64(F.lit(seed + 103), F.col(id_col)), F.col("__ps")).cast("int")
+    home = F.col("__pos") == 0
+    n_copies = F.col("__ms") + F.when(home, F.col("__ps") - 1).otherwise(0)
+    j, ms, other = F.col("__j"), F.col("__ms"), F.col("__j") - F.col("__ms")
+    cells = (
+        lists.withColumn("__j", F.explode(F.sequence(F.lit(0), n_copies - 1)))
+        .select(
+            id_col,
+            "__v",
+            "__list",
+            F.when(j < ms, j).otherwise(mh).alias("__mb"),
+            F.when(j < ms, ph).otherwise(other + (other >= ph).cast("int")).alias("__pb"),
+            # role bits: 1 = member, 2 = prober
+            F.when(j >= ms, 1).otherwise(2 + (home & (j == mh)).cast("int")).alias("__role"),
         )
+    )
+
+    def cell_kernel(tab):
+        ids, V, Vn, order = _prep_arrow(tab)
+        role = tab.column("__role").to_numpy()[order]
+        m, p = (role & 1) > 0, (role & 2) > 0
+        if not m.any() or not p.any():
+            return _cands()
+
+        def pick(sel):  # boolean selection keeps the id order
+            return (V, Vn, ids) if sel.all() else (V[sel], Vn[sel], ids[sel])
+
+        return _cands(*_knn_score_block(*pick(m), *pick(p), k))
+
+    # the explicit hash repartition on the grouping keys sizes the kernel's
+    # shuffle (see _ivf_grid_splits) and satisfies the group's clustered
+    # distribution, so Spark adds no second exchange
+    cands = (
+        cells.repartition(n_parts, "__list", "__mb", "__pb")
+        .groupBy("__list", "__mb", "__pb")
+        .applyInArrow(cell_kernel, schema=out_schema)
+    )
     # IVF candidates are exactly-once by construction (one inverted list per
     # member; one grid cell per (member, prober) pair) — skip the dedup
     # aggregate's full extra shuffle over ~n x nprobe x k candidate rows
     return _knn_rank(cands, k, id_col, dedup=False)
 
 
-def _ivf_grid_splits(
-    valid: DataFrame, C, dim: int, nprobe: int, max_bucket: int, max_probers: int
-):
-    """Per-list grid-block counts for knn_join's IVF path, as
-    ``(splits_df_or_None, n_cells)`` — None when no list exceeds either cap
-    (the common case — zero extra plan nodes then); ``n_cells`` is the total
-    cogroup cell count (used to size the cogroup's partitioning).
+# Fewest (member, prober) pairs worth one kernel task. Starting a task that
+# evaluates Python costs ~0.2 CPU-s before the kernel runs (measured on a
+# 4-vCPU host: a trivial arrow_udf at 4, 64 and 256 partitions, worker CPU
+# read from /proc), and the kernel scores a pair in ~24 ns (7.6 s for ~312 M
+# pairs), so one start-up buys ~8 M pairs. 32 M pairs per task keeps the
+# kernel work ~4x the start-up cost.
+MIN_PAIRS_PER_TASK = 32_000_000
 
-    One extra assignment pass (posexplode of the nprobe list array; pos 0 is
-    the member list — _probe_np orders nearest-first with the same
-    lowest-id tie rule as its argmax leg) aggregated to <= nlist rows and
-    collected. Counts only SIZE the blocks (ceil(count/cap)), so a last-ulp
-    member-assignment difference between this pass and the members frame's
-    own argmax call is harmless — blocks stay ~cap-bounded either way."""
-    if max_bucket <= 0 and max_probers <= 0:
-        return None, max(1, len(C))
+
+def _ivf_grid_splits(
+    valid: DataFrame, id_col: str, C, dim: int, nprobe: int, max_bucket: int, max_probers: int
+):
+    """Per-list grid-block counts and the kernel's partition count for
+    knn_join's IVF path, as ``(splits_df_or_None, n_parts)``. The splits
+    frame is None when no list exceeds either cap (the common case — no
+    join in the plan then); a cap <= 0 means one block on that side.
+
+    Both come from one deterministic 1/16 id-hash sample (x16 scale-up):
+    posexplode of the nprobe list array, where pos 0 is the member list,
+    aggregated to <= nlist (list, members, probers) rows and collected.
+    Counts only SIZE things — blocks (ceil(1.25 x count / cap), 25%
+    headroom) and the partition count — so sampling error (~3% at the caps,
+    >= 1k sampled rows per near-cap list) is harmless; blocks stay
+    ~cap-bounded either way. The sample is a pure function of the ids, so
+    sizing, and with it every GEMM tile shape, is deterministic run-to-run.
+
+    ``n_parts = clamp(ceil(est_pairs / MIN_PAIRS_PER_TASK), cores,
+    min(4 x cells, 4096))``, est_pairs = sum over lists of members x
+    probers (a pair's cell does not change its count). Spreading
+    the cells over ~4x as many partitions stops balls-in-bins collisions
+    from stacking several hot cells on one straggler task (an sf1.0 corpus
+    scores ~3x10^10 pairs, far above the floor, and gets it); a corpus whose
+    kernel work is small next to task start-up cost gets one task per core
+    instead, since each extra task costs more to start than it saves."""
     from math import ceil
 
-    # r8: counts only SIZE blocks, so a deterministic 1/16 id-hash sample
-    # (x16 scale-up, 25% sizing headroom) replaces the full-corpus
-    # assignment pass — at scale this was a whole extra UDF scan per call
-    # for numbers that tolerate a few percent of error. Sampling error at
-    # the caps (>= 1k sampled rows per near-cap list) is ~3%, far inside
-    # the headroom; blocks stay ~cap-bounded either way. The sample is a
-    # pure function of the ids, so sizing (and with it every GEMM tile
-    # shape) remains deterministic run-to-run.
     rate = 16
-    id_col_name = [c for c in valid.columns if c != "__v"][0]
     rows = (
-        valid.where(F.pmod(F.xxhash64(F.lit(11), F.col(id_col_name)), F.lit(rate)) == 0)
+        valid.where(F.pmod(F.xxhash64(F.lit(11), F.col(id_col)), F.lit(rate)) == 0)
         .select(
             F.posexplode(_ivf_lists_udf(C, dim, nprobe)(F.col("__v"))).alias(
                 "__pos", "__l"
@@ -1438,24 +1454,26 @@ def _ivf_grid_splits(
         .collect()
     )
     est = {int(r["__l"]): (int(r["__mc"]) * rate, int(r["__pc"]) * rate) for r in rows}
+
+    def blocks(count, cap):
+        return max(1, ceil(1.25 * count / cap)) if cap > 0 else 1
+
     # EVERY list id gets a row (missing/under-sampled lists default to 1x1):
     # the split join is inner on __l, so a list absent from this table would
     # silently drop its members
     data = [
-        (
-            l,
-            max(1, ceil(1.25 * est.get(l, (0, 0))[0] / max_bucket)) if max_bucket > 0 else 1,
-            max(1, ceil(1.25 * est.get(l, (0, 0))[1] / max_probers)) if max_probers > 0 else 1,
-        )
-        for l in range(len(C))
+        (l, blocks(mc, max_bucket), blocks(pc, max_probers))
+        for l, (mc, pc) in enumerate(est.get(i, (0, 0)) for i in range(len(C)))
     ]
-    n_cells = sum(ms * ps for _, ms, ps in data) or max(1, len(C))
-    if all(ms == 1 and ps == 1 for _, ms, ps in data):
-        return None, n_cells
-    return (
-        valid.sparkSession.createDataFrame(data, "__l int, __ms int, __ps int"),
-        n_cells,
+    est_pairs = sum(mc * pc for mc, pc in est.values())
+    n_cells = sum(ms * ps for _, ms, ps in data)
+    n_parts = max(
+        valid.sparkSession.sparkContext.defaultParallelism,
+        min(ceil(est_pairs / MIN_PAIRS_PER_TASK), 4 * n_cells, 4096),
     )
+    if all(ms == 1 and ps == 1 for _, ms, ps in data):
+        return None, n_parts
+    return valid.sparkSession.createDataFrame(data, "__l int, __ms int, __ps int"), n_parts
 
 
 def _knn_join_pairjoin(
@@ -1496,14 +1514,10 @@ def _ivf_topk_pairjoin(
     """Pair-join reference implementation (r3 path): list-id equi-join with
     the exploded query probes, interpreted-HOF re-rank. Kept ONLY as the
     parity oracle for the matrix engine."""
-    if not 1 <= nprobe <= nlist:
-        raise ValueError(f"nprobe must be in [1, nlist={nlist}], got {nprobe}")
+    C = _ivf_codebook(centroids, dim, nlist, nprobe)
+    if C is None:
+        C = _kmeans_centroids(corpus, vec_col, id_col, nlist, dim, seed)
     c_base = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv"))
-    C = (
-        centroids
-        if centroids is not None
-        else _kmeans_centroids(corpus, vec_col, id_col, nlist, dim, seed)
-    )
     c = c_base.withColumn(
         "list_id", F.element_at(_ivf_lists_udf(C, dim, 1)(F.col("__cv")), 1)
     )

@@ -277,6 +277,42 @@ def test_vector_kernel_null_and_ragged_rows(spark, kernel, per_row):
         assert out.loc[out.vec_id == 0, "out"].tolist() == [2, 0]
 
 
+def test_probe_np_one_ordering_rule():
+    """_probe_np's argmax leg (nprobe == 1) and its argsort leg agree on
+    slot 0 — knn_join reads slot 0 as the member list — on finite rows,
+    NaN-element rows and inf-element rows: a NaN score ranks below every
+    number (an inf element against a 0 centroid weight scores NaN)."""
+    import numpy as np
+
+    from pitfeat.ops.similarity import _probe_np
+
+    inf, nan = np.inf, np.nan
+    rs = np.random.RandomState(3)
+    V = np.vstack(
+        [
+            rs.normal(size=(6, 3)),
+            [[1.0, 1.0, 0.0]],  # exact tie: the lower list id wins
+            [[nan, 1.0, 2.0]],
+            [[1.0, nan, 0.0]],
+            [[inf, 0.0, 0.0]],
+            [[-inf, 0.0, 0.0]],
+            [[inf, 1.0, -inf]],
+            [[0.0, -inf, 0.0]],
+        ]
+    )
+    ok = np.ones(len(V), dtype=bool)
+    ok[2] = False  # invalid rows stay on list 0
+    CT = np.eye(4, 3).T.copy()  # 4 lists, the last one all-zero
+    with np.errstate(invalid="ignore"):  # inf x 0 in the matmul
+        first = _probe_np(V, ok, CT, 1)[:, 0]
+        for nprobe in (2, 3, 4):
+            np.testing.assert_array_equal(_probe_np(V, ok, CT, nprobe)[:, 0], first)
+    assert first[2] == 0
+    assert first[6] == 0  # tie between lists 0 and 1
+    assert first[9] == 0  # [inf, nan, nan, nan]: the one number ranks first
+    assert first[12] == 0  # [nan, -inf, nan, nan]: all last, lower id wins
+
+
 def test_vectors_decoder_edge_rows():
     """_vectors, the one Arrow vector decoder: null, empty, short and long
     rows are invalid and decode to zero rows; a null element inside a

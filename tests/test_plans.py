@@ -122,10 +122,13 @@ def test_ann_plans_have_no_rowwise_python(spark):
 
 def test_knn_join_plans_never_materialize_pairs(spark):
     """knn_join's bucketed paths (VERDICT r4 #3) must score inside grouped
-    Arrow kernels — FlatMapGroupsInArrow (lsh) / FlatMapCoGroupsInArrow
-    (ivf) — with NO cartesian/nested-loop join and no row-wise Python
-    anywhere: pair rows exist only as the <= n x fanout x k kernel OUTPUT,
-    never as a join product."""
+    Arrow kernels — FlatMapGroupsInArrow for both lsh and ivf — with NO
+    cartesian/nested-loop join and no row-wise Python anywhere: pair rows
+    exist only as the <= n x fanout x k kernel OUTPUT, never as a join
+    product. The ivf plan assigns lists in ONE Arrow pass, and a corpus
+    whose kernel work is small gets one kernel partition per core."""
+    import re
+
     import numpy as np
 
     from pitfeat.ops.similarity import knn_join
@@ -142,7 +145,36 @@ def test_knn_join_plans_never_materialize_pairs(spark):
     # both kernels are Arrow-native (applyInArrow) — vectors reach numpy as
     # one flat-buffer reshape instead of per-row objects
     assert "FlatMapGroupsInArrow" in lsh_plan
-    assert "FlatMapCoGroupsInArrow" in ivf_plan
+    assert "FlatMapGroupsInArrow" in ivf_plan
+    assert "CoGroups" not in ivf_plan
+    assert ivf_plan.count("ArrowEvalPython") == 1, ivf_plan[:2000]
+    kernel_parts = re.findall(r"Exchange hashpartitioning\(__list#\d+[^)]*, (\d+)\)", ivf_plan)
+    assert kernel_parts == [str(spark.sparkContext.defaultParallelism)], ivf_plan[:2000]
+
+
+def test_ivf_kernel_partitions_follow_the_work(spark, monkeypatch):
+    """knn_join's IVF kernel shuffle is sized by the sampled pair count:
+    one partition per core while a task's kernel work would not dwarf its
+    start-up cost, ~4x the cell count (capped) once it does — where
+    spreading the cells stops straggler tasks."""
+    import numpy as np
+
+    from pitfeat.ops import similarity as SIM
+    from pitfeat.synth import gen_clustered_embeddings
+
+    e = gen_clustered_embeddings(spark, 1000, dim=64, n_centers=8, seed=5)
+    valid = e.select("vec_id", F.col("embedding").cast("array<double>").alias("__v"))
+    C = np.eye(8, 64)
+    cores = spark.sparkContext.defaultParallelism
+    assert SIM._ivf_grid_splits(valid, "vec_id", C, 64, 2, 32768, 131072) == (None, cores)
+    monkeypatch.setattr(SIM, "MIN_PAIRS_PER_TASK", 1)
+    assert SIM._ivf_grid_splits(valid, "vec_id", C, 64, 2, 32768, 131072) == (
+        None,
+        max(cores, 4 * len(C)),
+    )
+    splits, n_parts = SIM._ivf_grid_splits(valid, "vec_id", C, 64, 2, 20, 40)
+    cells = sum(r["__ms"] * r["__ps"] for r in splits.collect())
+    assert cells > len(C) and n_parts == max(cores, min(4 * cells, 4096))
 
 
 def test_ewma_plan_single_pass(spark):

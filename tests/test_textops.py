@@ -452,6 +452,43 @@ def test_ivf_centroid_reuse_and_null_vectors(spark):
     assert sorted(map(tuple, out)) == a  # null vector scores 0, never top-5
 
 
+def test_ivf_codebook_checked_before_any_job(spark, embs):
+    """A given codebook is validated at call time by ivf_topk and knn_join
+    alike — width must equal ``dim`` and ``nprobe`` is bounded by its row
+    count, not by ``nlist`` — so a bad one raises ValueError before any
+    Spark job runs instead of failing inside a Python worker."""
+    import numpy as np
+
+    from pitfeat.ops.similarity import ivf_topk, knn_join
+
+    e = embs
+    qs = e.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    sc = spark.sparkContext
+    calls = {
+        "topk-width": lambda: ivf_topk(e, qs, k=5, nprobe=2, dim=64, centroids=np.eye(8, 32)),
+        "topk-nprobe": lambda: ivf_topk(
+            e, qs, k=5, nlist=16, nprobe=9, dim=64, centroids=np.eye(8, 64)
+        ),
+        "knn-width": lambda: knn_join(e, k=5, nprobe=2, dim=64, centroids=np.eye(8, 32)),
+        "knn-nprobe": lambda: knn_join(
+            e, k=5, nlist=16, nprobe=9, dim=64, centroids=np.eye(8, 64)
+        ),
+        "knn-flat": lambda: knn_join(e, k=5, nprobe=1, dim=64, centroids=np.ones(64)),
+    }
+    for name, call in calls.items():
+        group = f"ivf-codebook-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="centroids|nprobe"):
+                call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+
 def test_multimodal_resize_plumbing(spark):
     """resize_media: image payloads replaced and metadata updated, non-image
     rows byte-identical, schema preserved, deterministic."""
@@ -1181,9 +1218,9 @@ def test_knn_join_exact_parity_and_semantics(spark):
 
 def test_knn_join_ivf_exhaustive_equals_exact(spark, embs):
     """nprobe == nlist probes every inverted list, so the IVF-bucketed path
-    (cogroup kernel + candidate dedup + global rank) must reproduce the
-    exact result EXACTLY — the provable-recall configuration the contract
-    query uses."""
+    (one assignment pass + grouped cell kernel + global rank) must
+    reproduce the exact result EXACTLY — the provable-recall configuration
+    the contract query uses."""
     from pitfeat.ops import similarity as SIM
 
     exact = _knn_norm(SIM.knn_join(embs, k=5, method="exact"))
@@ -1191,7 +1228,7 @@ def test_knn_join_ivf_exhaustive_equals_exact(spark, embs):
     assert ivf == exact and len(exact) == 500 * 5
     # partitioning invariance of the bucketed path: the kernel's GEMM sees
     # the same id-sorted group matrix at any layout, so results are
-    # identical (the engine's batch-shape trap does not apply to cogroup
+    # identical (the engine's batch-shape trap does not apply to kernel
     # groups — this pin keeps that argument honest)
     ivf7 = _knn_norm(
         SIM.knn_join(embs.repartition(7), k=5, method="ivf", nlist=8, nprobe=8)
@@ -1200,7 +1237,7 @@ def test_knn_join_ivf_exhaustive_equals_exact(spark, embs):
 
 
 def test_knn_join_ivf_grid_split_parity_and_hot_lists(spark):
-    """Hot inverted lists are grid-split (blocked cogroup), not dropped:
+    """Hot inverted lists are grid-split (blocked cells), not dropped:
     with caps far below every list size the IVF path must (a) reproduce
     the uncapped result — the old LSH-style drop silently removed a hot
     list's members as candidates EVERYWHERE, since an IVF member lives in
