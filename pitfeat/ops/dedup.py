@@ -5,14 +5,22 @@ Four families, each scale-designed:
 - exact: hash-groupBy on a normalized fingerprint — one shuffle, map-side
   partial agg; the canonical keeper is min(doc_id) for determinism.
 - MinHash + LSH: shingle -> K minhashes -> B bands; candidate pairs come from
-  a self-join on (band, band_hash) buckets, NEVER an all-pairs product. All
-  hashing is Catalyst (xxhash64 + transform), so the signature build is
-  JVM-side; verification of candidates computes exact Jaccard on shingle sets
-  as |A∩B| / (|A|+|B|-|A∩B|), after an exact length-ratio prefilter.
-- SimHash: 64-bit signature from per-shingle hash bit votes; near-dups are
-  pairs within Hamming distance d, found via 4-segment LSH partitioning
-  (pigeonhole: d<=3 guarantees one equal 16-bit segment).
-- n-gram Jaccard: exact verification kernel used by both LSH paths.
+  a self-join on (band, band_hash) buckets, NEVER an all-pairs product. The
+  signatures come from one fused Arrow kernel over the raw text; banding,
+  bucketing and verification are Catalyst. Verification computes exact
+  Jaccard on 64-bit-hashed shingle sets (a second Arrow kernel) as
+  |A∩B| / (|A|+|B|-|A∩B|), after an exact length-ratio prefilter.
+- SimHash: 64-bit signature from per-shingle hash bit votes (Arrow kernel);
+  near-dups are pairs within Hamming distance d, found via 4-segment LSH
+  partitioning (pigeonhole: d<=3 guarantees one equal 16-bit segment).
+- n-gram Jaccard: exact pairwise Jaccard over Catalyst string shingles for
+  two small candidate sets.
+
+The three Python kernels share ONE tokenizer (``_token_hashes``) and ONE
+shingle hash (``_shingle_hashes``), so what a shingle is is written once on
+the Python side. It deliberately differs from the Catalyst normalization
+(``text._normalized``) on Unicode whitespace and trim; the two are never
+mixed within one operator.
 
 At 100TB the only shuffles are groupBys on banded keys whose fanout we
 control (B bands x rows), and candidate verification joins are
@@ -24,9 +32,73 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pitfeat.ops.text import _normalized
+
 # Mersenne prime for affine minhash permutations; 31-bit so a*h + b stays
 # well under 2^63 (Spark 4 runs ANSI mode: long overflow would throw)
 _P = (1 << 31) - 1
+# rolling n-gram polynomial base; < 2^31, so a combine step reduced mod _P
+# stays under 2^52
+_POLY = 1_000_003
+
+
+def _token_hashes(arr):
+    """Arrow string array -> ``(s, lens, th)``: the normalized strings (null
+    -> "", strip, lower, every whitespace run -> one space; Python ``str`` /
+    ``re`` semantics, so Unicode whitespace counts), each row's token count
+    (>= 1: "" is one empty token), and the flat uint64 per-token hashes
+    (``pd.util.hash_array``: fixed key, deterministic; each distinct token
+    hashed once via ``pd.factorize``). The one Python-side tokenizer of the
+    three dedup kernels."""
+    import numpy as np
+    import pandas as pd
+
+    s = arr.to_pandas().fillna("").str.strip().str.lower()
+    s = s.str.replace(r"\s+", " ", regex=True)
+    toks = s.str.split(" ")
+    lens = toks.str.len().to_numpy(dtype=np.int64)
+    flat = np.concatenate(toks.to_numpy()) if len(toks) else np.array([], dtype=object)
+    codes, uniq = pd.factorize(flat)
+    return s, lens, pd.util.hash_array(uniq.astype(object))[codes]
+
+
+def _shingle_hashes(s, th, lens, n: int, mod: int | None = None):
+    """Word n-gram shingle hashes of every row -> ``(sh, offs)``: the flat
+    uint64 hashes in row order and the (rows + 1) row offsets into them.
+
+    A shingle hashes as the rolling polynomial over its token hashes,
+    computed over the flat token stream with windows that cross a row
+    boundary masked out; ``mod=_P`` reduces every step into MinHash's 31-bit
+    ring, ``None`` keeps uint64 wraparound. A row with fewer than ``n``
+    tokens has exactly one shingle, the hash of its whole normalized string
+    (the Catalyst ``_shingles`` fallback), so every row has at least one."""
+    import numpy as np
+    import pandas as pd
+
+    m = None if mod is None else np.uint64(mod)
+    if m is not None:
+        th = th % m
+    top = max(len(th) - n + 1, 0)
+    sh = th[:top].copy()
+    for k in range(1, n):
+        sh = sh * np.uint64(_POLY) + th[k : top + k]  # wraps mod 2^64
+        if m is not None:
+            sh %= m
+    rid = np.repeat(np.arange(len(lens)), lens)
+    sh = sh[rid[:top] == rid[n - 1 :]]
+    short = lens < n
+    counts = np.where(short, 1, lens - n + 1)
+    offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(counts, out=offs[1:])
+    if short.any():
+        whole = pd.util.hash_array(s.to_numpy(dtype=object)[short])
+        slot = np.zeros(offs[-1], dtype=bool)
+        slot[offs[:-1][short]] = True
+        out = np.empty(offs[-1], dtype=np.uint64)
+        out[slot] = whole if m is None else whole % m
+        out[~slot] = sh
+        sh = out
+    return sh, offs
 
 
 def _shingles(text_col, n: int = 3):
@@ -36,7 +108,7 @@ def _shingles(text_col, n: int = 3):
     min over its set) and array_intersect/array_union already use set
     semantics for Jaccard — while Spark's array_distinct is O(len^2) and
     dominated the whole dedup pipeline when applied here."""
-    toks = F.split(F.regexp_replace(F.lower(F.trim(text_col)), r"\s+", " "), " ")
+    toks = F.split(_normalized(text_col), " ")
     cnt = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
     grams = F.transform(
@@ -89,7 +161,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     docs, each one silently deleting a unique document (min-id keeps only one
     row per bucket). At 128 bits the expectation is n^2/2^129 ≈ 1.5x10^-15:
     zero for any physical corpus."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = _normalized(F.col(text_col))
     # seed constant FIRST: Spark folds multi-arg xxhash64 left-to-right with
     # the accumulated hash as the next seed, so xxhash64(norm, lit) would be
     # a pure function of xxhash64(norm) — a fake second hash that collides
@@ -117,11 +189,9 @@ def minhash_signatures(
     as_array: bool = False,
 ) -> DataFrame:
     """K minhash values per doc, via ONE fused Arrow kernel over the raw text:
-    normalize + tokenize with pandas C string ops, token hashing via
-    ``pd.factorize`` + ``pd.util.hash_array`` (each unique token hashed once,
-    C-level, fixed key => deterministic), rolling-polynomial shingle hashes in
-    numpy (row boundaries masked), then K affine permutations + per-row
-    segment-min with ``np.minimum.reduceat``.
+    the shared tokenizer and shingle hash (``_token_hashes`` /
+    ``_shingle_hashes`` in the 31-bit ring), then K affine permutations +
+    per-row segment-min with ``np.minimum.reduceat``.
 
     Why fused: Spark evaluates higher-order array functions (``transform``)
     INTERPRETED, not whole-stage-codegen'd — the previous Catalyst
@@ -130,69 +200,31 @@ def minhash_signatures(
     Python loop: every step is a vectorized C operation over the flattened
     token stream."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
+
+    from pitfeat.ops.util import _list_array
 
     av, bv = _perm_coeffs(num_hashes, seed)
-    a_arr = np.asarray(av, dtype=np.int64)[:, None]
-    b_arr = np.asarray(bv, dtype=np.int64)[:, None]
-    poly_a = 1_000_003  # < 2^31: keeps every combine step under 2^62 (ANSI-safe)
 
     def mh_kernel(texts):
-        n_rows = len(texts)
-        if n_rows == 0:
-            return pd.Series([], dtype=object)
-        s = texts.fillna("").astype(str).str.strip().str.lower()
-        s = s.str.replace(r"\s+", " ", regex=True)
-        toks = s.str.split(" ")
-        lens = toks.str.len().to_numpy(dtype=np.int64)
-        flat = np.concatenate(toks.to_numpy())  # object array of tokens
-        codes, uniq = pd.factorize(flat)
-        uh = (pd.util.hash_array(uniq.astype(object)) % _P).astype(np.int64)
-        th = uh[codes]  # per-token hash, < P < 2^31
-        rid = np.repeat(np.arange(n_rows), lens)
-        m = len(th)
-        # rolling n-gram polynomial hash over the flat token stream; positions
-        # whose n-token window crosses a row boundary are masked out
-        if m >= shingle_n:
-            top = m - shingle_n + 1
-            sh = th[:top].copy()
-            for k in range(1, shingle_n):
-                sh = (sh * poly_a + th[k : top + k]) % _P
-            valid = rid[:top] == rid[shingle_n - 1 :]
-            sh = sh[valid]
-        else:
-            sh = np.array([], dtype=np.int64)
-        counts = np.maximum(lens - shingle_n + 1, 0)
-        has = counts > 0
-        mins = np.empty((num_hashes, n_rows), dtype=np.int64)
-        if has.any():
-            offs = np.zeros(int(has.sum()), dtype=np.int64)
-            np.cumsum(counts[has][:-1], out=offs[1:])
-            # one hash function at a time with a preallocated buffer: the
-            # previous (K, n_shingles) broadcast materialized K x 8B x n_sh
-            # (~128MB per 0.5M shingles) of temporaries — allocation- and
-            # memory-bandwidth-bound, and pathological under host memory
-            # pressure. A single n_sh buffer stays L2/L3-resident; same flops.
-            buf = np.empty_like(sh)
-            for k in range(num_hashes):
-                np.multiply(sh, a_arr[k, 0], out=buf)
-                buf += b_arr[k, 0]
-                buf %= _P
-                mins[k, has] = np.minimum.reduceat(buf, offs)
-        if (~has).any():
-            # short docs (< n tokens): single shingle = the whole normalized
-            # string, mirroring the Catalyst _shingles fallback
-            sh0 = (
-                pd.util.hash_array(s[~has].to_numpy(dtype=object)) % _P
-            ).astype(np.int64)
-            mins[:, ~has] = (sh0[None, :] * a_arr + b_arr) % _P
-        return pd.Series(list(mins.T))
+        s, lens, th = _token_hashes(texts)
+        sh, offs = _shingle_hashes(s, th, lens, shingle_n, mod=_P)
+        sh = sh.astype(np.int64)
+        mins = np.empty((num_hashes, len(lens)), dtype=np.int64)
+        # one hash function at a time with a preallocated buffer: a
+        # (K, n_shingles) broadcast materialized K x 8B x n_sh (~128MB per
+        # 0.5M shingles) of temporaries — allocation- and memory-bandwidth-
+        # bound, and pathological under host memory pressure. A single n_sh
+        # buffer stays L2/L3-resident; same flops.
+        buf = np.empty_like(sh)
+        for k in range(num_hashes):
+            np.multiply(sh, av[k], out=buf)
+            buf += bv[k]
+            buf %= _P
+            mins[k] = np.minimum.reduceat(buf, offs[:-1])
+        return _list_array(mins.T)
 
-    # set annotations eagerly: this module uses postponed annotation
-    # evaluation, which pandas_udf's hint inspection can't resolve
-    mh_kernel.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    mh_udf = pandas_udf(mh_kernel, "array<long>")
+    mh_udf = arrow_udf(mh_kernel, "array<long>")
 
     sig = df.withColumn("__sig", mh_udf(F.col(text_col)))
     if as_array:
@@ -223,8 +255,8 @@ def _drop_hot_buckets(banded: DataFrame, bucket_cols: list[str], cap: int) -> Da
 
 def _shingle_hash_udf(shingle_n: int):
     """Fused Arrow kernel: text -> array<long> of DISTINCT 64-bit shingle
-    hashes (uint64 rolling-polynomial over factorized token hashes, viewed as
-    int64 — the simhash kernel's hash family).
+    hashes (``_shingle_hashes`` in uint64 wraparound, viewed as int64 — the
+    simhash kernel's hash family), ascending as uint64 within each row.
 
     Used by the candidate-verification stage: exact Jaccard over hashed
     shingle sets equals Jaccard over string shingle sets except when two
@@ -233,62 +265,28 @@ def _shingle_hash_udf(shingle_n: int):
     identical sets). Why hashed + fused: Catalyst evaluates the string
     shingle pipeline (transform/slice/concat_ws) INTERPRETED — measured 9-13s
     for 10k candidate docs at sf0.1 vs ~1s for this kernel — and int64 arrays
-    make the downstream array_intersect/array_union set ops integer
-    comparisons instead of string comparisons."""
+    make the downstream array_intersect an integer comparison instead of a
+    string one, while the distinct sets give the union size as
+    |A| + |B| - |A∩B|."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    poly_a = np.uint64(1_000_003)
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
     def kernel(texts):
-        n_rows = len(texts)
-        if n_rows == 0:
-            return pd.Series([], dtype=object)
-        s = texts.fillna("").astype(str).str.strip().str.lower()
-        s = s.str.replace(r"\s+", " ", regex=True)
-        toks = s.str.split(" ")
-        lens = toks.str.len().to_numpy(dtype=np.int64)
-        flat = np.concatenate(toks.to_numpy())
-        codes, uniq = pd.factorize(flat)
-        uh = pd.util.hash_array(uniq.astype(object)).astype(np.uint64)
-        th = uh[codes]
-        rid = np.repeat(np.arange(n_rows), lens)
-        m = len(th)
-        if m >= shingle_n:
-            top = m - shingle_n + 1
-            sh = th[:top].copy()
-            for k in range(1, shingle_n):
-                sh = sh * poly_a + th[k : top + k]  # uint64 wraparound
-            valid = rid[:top] == rid[shingle_n - 1 :]
-            sh, srid = sh[valid], rid[:top][valid]
-        else:
-            sh = np.array([], dtype=np.uint64)
-            srid = np.array([], dtype=np.int64)
+        s, lens, th = _token_hashes(texts)
+        sh, offs = _shingle_hashes(s, th, lens, shingle_n)
         # per-row DISTINCT sets, fully vectorized: lexsort by (row, hash),
-        # drop adjacent duplicates, then split at row boundaries
-        order = np.lexsort((sh, srid))
-        sh, srid = sh[order], srid[order]
+        # drop adjacent duplicates, re-count each row
+        rid = np.repeat(np.arange(len(lens)), np.diff(offs))
+        order = np.lexsort((sh, rid))
+        sh, rid = sh[order], rid[order]
         keep = np.ones(len(sh), dtype=bool)
-        keep[1:] = (sh[1:] != sh[:-1]) | (srid[1:] != srid[:-1])
-        sh, srid = sh[keep], srid[keep]
-        cnt = np.bincount(srid, minlength=n_rows)
-        parts = np.split(sh.view(np.int64), np.cumsum(cnt)[:-1])
-        # short docs (< n tokens): single shingle = the whole normalized
-        # string, mirroring the Catalyst _shingles fallback
-        short = lens < shingle_n
-        if short.any():
-            sh0 = pd.util.hash_array(s[short].to_numpy(dtype=object)).astype(
-                np.uint64
-            )
-            out = list(parts)
-            for i, h0 in zip(np.nonzero(short)[0], sh0.view(np.int64)):
-                out[i] = np.array([h0], dtype=np.int64)
-            return pd.Series(out)
-        return pd.Series(list(parts))
+        keep[1:] = (sh[1:] != sh[:-1]) | (rid[1:] != rid[:-1])
+        offs = np.zeros(len(lens) + 1, dtype=np.int32)
+        np.cumsum(np.bincount(rid[keep], minlength=len(lens)), out=offs[1:])
+        return pa.ListArray.from_arrays(offs, sh[keep].view(np.int64))
 
-    kernel.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "array<long>")
+    return arrow_udf(kernel, "array<long>")
 
 
 def minhash_lsh_pairs(
@@ -518,8 +516,10 @@ def ngram_jaccard(
     text_col: str = "text",
     shingle_n: int = 3,
 ) -> DataFrame:
-    """Exact pairwise n-gram Jaccard for two (small) candidate sets — the
-    verification primitive. For full-table dedup use minhash_lsh_pairs."""
+    """Exact pairwise n-gram Jaccard over Catalyst string shingles for two
+    (small) candidate sets — a standalone check; minhash_lsh_pairs verifies
+    its own candidates over hashed shingle sets. For full-table dedup use
+    minhash_lsh_pairs."""
     a = with_shingles(df_a, text_col, shingle_n).select(
         F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
     )
@@ -541,68 +541,29 @@ def simhash(df: DataFrame, text_col: str = "text", shingle_n: int = 2) -> DataFr
 
     One fused Arrow kernel (same rationale as minhash_signatures: Catalyst
     higher-order functions run interpreted — the previous 64-aggregate
-    expression tree took 32.6s for 10k docs at sf0.1, this kernel ~1s):
-    tokenize with pandas C string ops, hash unique tokens once
-    (factorize + hash_array, uint64), rolling uint64 polynomial n-gram
-    hashes (numpy wraparound arithmetic, row-boundary masked), bit-unpack to
-    a (shingles x 64) +/-1 vote matrix, per-row segment-sum via
-    np.add.reduceat, sign-pack back to one int64."""
+    expression tree took 32.6s for 10k docs at sf0.1, this kernel ~1s): the
+    shared tokenizer and shingle hash (``_shingle_hashes`` in uint64
+    wraparound), +/-1 votes per bit, per-row segment-sum via
+    np.add.reduceat, sign-pack back to one int64. A tied bit is 0."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    poly_a = np.uint64(1_000_003)
-    bit_idx = np.arange(64, dtype=np.uint64)
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
     def sh_kernel(texts):
-        n_rows = len(texts)
-        if n_rows == 0:
-            return pd.Series([], dtype="int64")
-        s = texts.fillna("").astype(str).str.strip().str.lower()
-        s = s.str.replace(r"\s+", " ", regex=True)
-        toks = s.str.split(" ")
-        lens = toks.str.len().to_numpy(dtype=np.int64)
-        flat = np.concatenate(toks.to_numpy())
-        codes, uniq = pd.factorize(flat)
-        uh = pd.util.hash_array(uniq.astype(object)).astype(np.uint64)
-        th = uh[codes]
-        rid = np.repeat(np.arange(n_rows), lens)
-        m = len(th)
-        if m >= shingle_n:
-            top = m - shingle_n + 1
-            sh = th[:top].copy()
-            for k in range(1, shingle_n):
-                sh = sh * poly_a + th[k : top + k]  # uint64 wraparound, C-level
-            sh = sh[rid[:top] == rid[shingle_n - 1 :]]
-        else:
-            sh = np.array([], dtype=np.uint64)
-        counts = np.maximum(lens - shingle_n + 1, 0)
-        has = counts > 0
-        sums = np.zeros((n_rows, 64), dtype=np.int64)
-        if has.any():
-            offs = np.zeros(int(has.sum()), dtype=np.int64)
-            np.cumsum(counts[has][:-1], out=offs[1:])
-            # per-bit loop with one n_sh buffer instead of an (n_sh, 64)
-            # +/-1 vote matrix (~256MB per 0.5M shingles): same flops,
-            # cache-resident temporaries (see the minhash kernel's identical
-            # blocking rationale)
-            ones = np.uint64(1)
-            for b in range(64):
-                bit = ((sh >> np.uint64(b)) & ones).astype(np.int64)
-                np.multiply(bit, 2, out=bit)
-                bit -= 1
-                sums[has, b] = np.add.reduceat(bit, offs)
-        if (~has).any():
-            sh0 = pd.util.hash_array(s[~has].to_numpy(dtype=object)).astype(np.uint64)
-            bits0 = ((sh0[:, None] >> bit_idx) & np.uint64(1)).astype(np.int64)
-            sums[~has] = 2 * bits0 - 1
-        packed = (((sums > 0).astype(np.uint64)) << bit_idx).sum(
-            axis=1, dtype=np.uint64
-        )
-        return pd.Series(packed.view(np.int64))
+        s, lens, th = _token_hashes(texts)
+        sh, offs = _shingle_hashes(s, th, lens, shingle_n)
+        packed = np.zeros(len(lens), dtype=np.uint64)
+        # per-bit loop with one n_sh buffer instead of an (n_sh, 64) +/-1
+        # vote matrix (~256MB per 0.5M shingles): same flops, cache-resident
+        # temporaries (see the minhash kernel's identical blocking rationale)
+        for b in range(64):
+            bit = ((sh >> np.uint64(b)) & np.uint64(1)).astype(np.int64)
+            np.multiply(bit, 2, out=bit)
+            bit -= 1
+            packed |= (np.add.reduceat(bit, offs[:-1]) > 0).astype(np.uint64) << np.uint64(b)
+        return pa.array(packed.view(np.int64))
 
-    sh_kernel.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    sh_udf = pandas_udf(sh_kernel, "long")
+    sh_udf = arrow_udf(sh_kernel, "long")
 
     return df.withColumn("simhash", sh_udf(F.col(text_col)))
 

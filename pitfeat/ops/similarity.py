@@ -9,8 +9,8 @@ kernels), a per-partition per-query top-k keeps boundary ties, and only
 ~partitions x nq x k rows reach the global rank. No pair rows, no explode,
 no interpreted-HOF scoring in any hot path; scores use per-row pairwise
 summation so results are bit-identical at any parallelism. The r3
-pair-join implementations (``_*_pairjoin``) are retained as parity oracles
-only. Near-dup pair mining (``embedding_near_dup_pairs``) stays bucketed
+pair-join implementations live on as parity oracles in
+``tests/oracle_similarity.py``. Near-dup pair mining (``embedding_near_dup_pairs``) stays bucketed
 (written assignment table, hot-bucket cap) with an Arrow pair-cosine
 verify kernel.
 
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pitfeat.ops.util import _list_array
 
 
 # query-matrix broadcasts from prior _matrix_topk calls, unpersisted on the
@@ -72,18 +74,6 @@ def _vectors(arr, dim: int):
     return V, ok
 
 
-def _list_array(M):
-    """(n, w) numpy -> Arrow list array of the n length-w rows: an
-    arrow_udf's array<...> result, built from the flat buffer."""
-    import numpy as np
-    import pyarrow as pa
-
-    n, w = M.shape
-    return pa.ListArray.from_arrays(
-        pa.array(np.arange(0, (n + 1) * w, w, dtype=np.int32)), pa.array(M.ravel())
-    )
-
-
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
@@ -100,38 +90,6 @@ def with_cosine(df: DataFrame, col_a: str, col_b: str, out: str = "cosine") -> D
     return df.withColumn(out, F.when(denom > 0, _dot(a, b) / denom).otherwise(F.lit(0.0)))
 
 
-
-
-def _score_and_rank(
-    joined: DataFrame, k: int, id_col: str, query_id_col: str,
-    corpus_vec: str = "__cv", query_vec: str = "__qv",
-) -> DataFrame:
-    """Shared exact-cosine re-rank tail for cosine_topk/lsh_topk/ivf_topk —
-    ONE definition so tie-breaks (cosine desc, id asc) and the zero-denominator
-    rule can never silently diverge between the exact and ANN paths."""
-    from pyspark.sql import Window
-
-    denom = _norm(F.col(corpus_vec)) * _norm(F.col(query_vec))
-    # coalesce: a dim-mismatched pair's dot is NULL (zip_with null-pads the
-    # shorter array) — it scores 0.0, same as a null vector, so the pair-join
-    # oracles and the matrix engine agree on EVERY invalid-vector shape
-    # (ADVICE r4: they previously diverged on ragged vectors, NULL-ranked-
-    # last here vs 0.0 in the engine)
-    scored = joined.withColumn(
-        "cosine",
-        F.coalesce(
-            F.when(denom > 0, _dot(F.col(corpus_vec), F.col(query_vec)) / denom),
-            F.lit(0.0),
-        ),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Matrix-scored top-k engine (shared by cosine_topk / lsh_topk / ivf_topk)
 # ---------------------------------------------------------------------------
@@ -144,14 +102,13 @@ def _score_and_rank(
 # corpus computes a (batch x nq) score matmul against the broadcast query
 # matrix, keeps a per-partition top-k per query (ties at the boundary kept
 # in full), and only ~n_partitions x nq x k tiny rows reach the final
-# global rank. The pair-join implementations are retained below as parity
-# oracles (tests assert identical output), the same discipline as
-# _multi_table_buckets_expr.
+# global rank. The pair-join implementations are kept as parity oracles in
+# tests/oracle_similarity.py (tests assert identical output).
 
 
 def _rank_topk(scored: DataFrame, k: int, id_col: str, query_id_col: str) -> DataFrame:
     """Global (cosine desc, id asc) rank-to-k over pre-scored candidates —
-    the same tie rule as _score_and_rank, single-sourced for the engine."""
+    the pair-join oracles' tie rule, single-sourced for the engine."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(query_id_col).orderBy(
@@ -428,24 +385,6 @@ def _infer_dim(queries: DataFrame, vec_col: str) -> int:
     return len(first[0][0])
 
 
-def _cosine_topk_pairjoin(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Pair-join reference implementation (r3 path): broadcast crossJoin +
-    interpreted-HOF cosine. Kept ONLY as the parity oracle for the matrix
-    engine (tests/test_textops.py asserts identical output)."""
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
-    c = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv"))
-    return _score_and_rank(c.crossJoin(F.broadcast(q)), k, id_col, query_id_col)
-
-
 def _hyperplane_component(seed: int, bit: int, j: int) -> float:
     """Deterministic pseudo-random hyperplane component in [-0.5, 0.5).
     Python ``hash`` over an int tuple is process-stable (int hashing is not
@@ -470,8 +409,9 @@ def _hyperplane_matrix(dim: int, nbits: int, tables: int, seed: int):
 
 def _hyperplane(dim: int, bit: int, seed: int):
     """Expression-path hyperplane (literal array). Kept for lsh_signatures'
-    single-signature API and as the parity oracle for the fused kernel
-    (tests/test_kernels.py); the hot paths use _multi_table_buckets instead."""
+    single-signature API and the expression-path parity oracle for the
+    fused kernel (tests/oracle_similarity.py); the hot paths use
+    _multi_table_buckets instead."""
     comps = [F.lit(_hyperplane_component(seed, bit, j)) for j in range(dim)]
     return F.array(*comps)
 
@@ -546,27 +486,6 @@ def _multi_table_buckets(
     )
 
 
-def _multi_table_buckets_expr(
-    df: DataFrame, vec_col: str, nbits: int, tables: int, dim: int, seed: int
-) -> DataFrame:
-    """Pure-expression reference implementation (the pre-fusion path): kept
-    ONLY as the parity oracle for _table_sigs_udf — its plan is
-    O(tables*nbits*dim) literal nodes and must not be used at scale."""
-    entries = []
-    for t in range(tables):
-        sig = F.lit(0).cast("long")
-        for bit in range(nbits):
-            h = _hyperplane(dim, bit, seed + 7919 * (t + 1))
-            d = _dot(F.col(vec_col), h)
-            sig = sig.bitwiseOR(
-                F.when(d >= 0, F.lit(1 << bit).cast("long")).otherwise(F.lit(0).cast("long"))
-            )
-        entries.append(F.struct(F.lit(t).alias("tbl"), sig.alias("bucket")))
-    return df.withColumn("__e", F.explode(F.array(*entries))).select(
-        *df.columns, F.col("__e.tbl").alias("tbl"), F.col("__e.bucket").alias("bucket")
-    )
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -606,33 +525,6 @@ def lsh_topk(
         corpus, queries, k, id_col, vec_col, query_id_col, dim,
         cand_masker=masker, qmat=qmat,
     )
-
-
-def _lsh_topk_pairjoin(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    nbits: int = 8,
-    tables: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Pair-join reference implementation (r3 path): xTables bucket explode,
-    broadcast bucket join, interpreted-HOF re-rank. Kept ONLY as the parity
-    oracle for the matrix engine."""
-    c = _multi_table_buckets(
-        corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")),
-        "__cv", nbits, tables, dim, seed,
-    )
-    q = _multi_table_buckets(
-        queries.select(F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")),
-        "__qv", nbits, tables, dim, seed,
-    )
-    joined = c.join(F.broadcast(q), ["tbl", "bucket"]).dropDuplicates([id_col, query_id_col])
-    return _score_and_rank(joined, k, id_col, query_id_col)
 
 
 def _pair_cosine_udf(dim: int):
@@ -1474,56 +1366,3 @@ def _ivf_grid_splits(
     if all(ms == 1 and ps == 1 for _, ms, ps in data):
         return None, n_parts
     return valid.sparkSession.createDataFrame(data, "__l int, __ms int, __ps int"), n_parts
-
-
-def _knn_join_pairjoin(
-    df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Brute-force pair-join reference for knn_join: self crossJoin of the
-    valid rows, HOF cosine, windowed rank. All-pairs by construction — kept
-    ONLY as the small-scale parity oracle (same discipline as the other
-    _*_pairjoin paths)."""
-    if dim is None:
-        dim = _infer_dim(df, vec_col)
-    base = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-    valid = base.where(F.col("__v").isNotNull() & (F.size("__v") == dim))
-    a = valid.select(F.col(id_col), F.col("__v").alias("__cv"))
-    b = valid.select(F.col(id_col).alias("nbr_id"), F.col("__v").alias("__qv"))
-    joined = a.crossJoin(b).where(F.col(id_col) != F.col("nbr_id"))
-    out = _score_and_rank(joined, k, "nbr_id", id_col)
-    return out.select(id_col, "nbr_id", "cosine", "rank")
-
-
-def _ivf_topk_pairjoin(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    nlist: int = 16,
-    nprobe: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    centroids=None,
-) -> DataFrame:
-    """Pair-join reference implementation (r3 path): list-id equi-join with
-    the exploded query probes, interpreted-HOF re-rank. Kept ONLY as the
-    parity oracle for the matrix engine."""
-    C = _ivf_codebook(centroids, dim, nlist, nprobe)
-    if C is None:
-        C = _kmeans_centroids(corpus, vec_col, id_col, nlist, dim, seed)
-    c_base = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv"))
-    c = c_base.withColumn(
-        "list_id", F.element_at(_ivf_lists_udf(C, dim, 1)(F.col("__cv")), 1)
-    )
-    q = (
-        queries.select(F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv"))
-        .withColumn("list_id", F.explode(_ivf_lists_udf(C, dim, nprobe)(F.col("__qv"))))
-    )
-    joined = c.join(F.broadcast(q), "list_id").dropDuplicates([id_col, query_id_col])
-    return _score_and_rank(joined, k, id_col, query_id_col)

@@ -1,10 +1,11 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All JVM-side Catalyst expressions (no Python in the hot path): language-ID by
-stopword-hit heuristic, quality scoring (length / punctuation / stopword
-ratios), token counting (whitespace + BPE-ish regex), and rolling-hash document
-fingerprinting. Designed for the ``documents`` table shape
-(doc_id, text, lang, source, n_chars) but generic over any text column.
+Language-ID by stopword-hit heuristic, quality scoring (length / punctuation
+/ stopword ratios), token counting (whitespace + BPE-ish regex), and document
+fingerprinting. All are Catalyst expressions except quality scoring's three
+integer counts, which come from one fused Arrow kernel. Designed for the
+``documents`` table shape (doc_id, text, lang, source, n_chars) but generic
+over any text column.
 """
 
 from __future__ import annotations
@@ -20,6 +21,13 @@ _LANG_MARKERS = {
     "fr": ["le", "la", "les", "des", "est"],
     "de": ["der", "die", "und", "das", "ist"],
 }
+
+
+def _normalized(col):
+    """Catalyst text normalization: trim, lowercase, every ``\\s+`` run
+    (Java's ASCII whitespace class) -> one space. Shared by ``fingerprint``,
+    ``dedup.exact_dedup`` and ``dedup._shingles``."""
+    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
 def _hits(col, words):
@@ -73,12 +81,15 @@ def _quality_counts_udf():
     NULL text yields a NULL struct, reproducing split(NULL)/size(NULL)/
     length(NULL) null propagation in the downstream expressions. Counting is
     integer-exact, so every float the score computes from these is
-    bit-identical to the expression path (pinned by the parity test)."""
+    bit-identical to the expression path (pinned by the parity test). The
+    tokenizer is deliberately NOT dedup's ``_token_hashes``: no strip,
+    empty tokens kept, null stays null."""
     import re
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
     stop_words = np.array(
         sorted({w for ws in _LANG_MARKERS.values() for w in ws}), dtype=object
@@ -86,50 +97,26 @@ def _quality_counts_udf():
     punct_re = re.compile(r"[!-/:-@\[-`{-~]")
 
     def kernel(texts):
-        n = len(texts)
-        out = pd.DataFrame(
-            {
-                "n_tok": pd.array(np.zeros(n, dtype=np.int64), dtype="Int64"),
-                "n_stop": pd.array(np.zeros(n, dtype=np.int64), dtype="Int64"),
-                "n_punct": pd.array(np.zeros(n, dtype=np.int64), dtype="Int64"),
-            }
-        )
-        mask = texts.notna().to_numpy()
-        if not mask.any():
-            out.loc[:, :] = pd.NA
-            return out
-        s = texts[mask].astype(str)
-        toks = s.str.lower().str.split(r"[ \t\n\x0b\f\r]+")
+        ok = texts.is_valid().to_numpy(zero_copy_only=False)
+        toks = texts.drop_null().to_pandas().str.lower().str.split(r"[ \t\n\x0b\f\r]+")
+        # every non-null row has >= 1 token ("" splits to [""])
         lens = toks.str.len().to_numpy(dtype=np.int64)
-        flat = (
-            np.concatenate(toks.to_numpy())
-            if lens.sum()
-            else np.array([], dtype=object)
-        )
+        flat = np.concatenate(toks.to_numpy()) if len(toks) else np.array([], dtype=object)
         codes, uniq = pd.factorize(flat)
-        is_stop = np.isin(uniq, stop_words)
         pc_uniq = np.fromiter(
             (len(punct_re.findall(t)) for t in uniq), dtype=np.int64, count=len(uniq)
         )
         offs = np.zeros(len(lens), dtype=np.int64)
         np.cumsum(lens[:-1], out=offs[1:])
-        nz = lens > 0
-        n_stop = np.zeros(len(lens), dtype=np.int64)
-        n_punct = np.zeros(len(lens), dtype=np.int64)
-        if nz.any() and len(codes):
-            stop_per_tok = is_stop[codes].astype(np.int64)
-            punct_per_tok = pc_uniq[codes]
-            n_stop[nz] = np.add.reduceat(stop_per_tok, offs[nz])
-            n_punct[nz] = np.add.reduceat(punct_per_tok, offs[nz])
-        out.loc[mask, "n_tok"] = lens
-        out.loc[mask, "n_stop"] = n_stop
-        out.loc[mask, "n_punct"] = n_punct
-        if not mask.all():
-            out.loc[~mask, :] = pd.NA
-        return out
+        counts = np.zeros((3, len(ok)), dtype=np.int64)
+        counts[0, ok] = lens
+        counts[1, ok] = np.add.reduceat(np.isin(uniq, stop_words)[codes].astype(np.int64), offs)
+        counts[2, ok] = np.add.reduceat(pc_uniq[codes], offs)
+        return pa.StructArray.from_arrays(
+            list(counts), names=["n_tok", "n_stop", "n_punct"], mask=pa.array(~ok)
+        )
 
-    kernel.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    return pandas_udf(kernel, "struct<n_tok: long, n_stop: long, n_punct: long>")
+    return arrow_udf(kernel, "struct<n_tok: long, n_stop: long, n_punct: long>")
 
 
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -175,7 +162,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fp64") ->
     Identity decisions must key on BOTH columns: a single 64-bit key expects
     n^2/2^65 collisions — ≈2.7x10^4 silently-merged distinct docs at n=10^12;
     the 128-bit pair expects ≈1.5x10^-15 (zero for any physical corpus)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = _normalized(F.col(text_col))
     # lit FIRST: xxhash64 folds left-to-right with the running hash as seed,
     # so lit-last would make this column a pure function of out_col (collides
     # exactly when it does); lit-first = a genuinely different fixed seed

@@ -16,6 +16,9 @@ round-robin (deterministic via Spark's sort-before-repartition,
 SPARK-23207). Consumers must be per-row / partitioning-invariant — true for
 every kernel this repo applies it to (text hash kernels, per-row Catalyst
 projections).
+
+``_list_array``: the one builder of an arrow_udf's fixed-width
+``array<...>`` result from an (n, w) numpy matrix.
 """
 
 from __future__ import annotations
@@ -58,3 +61,15 @@ def widen_partitions(df: DataFrame, key: str | None = None) -> DataFrame:
     if key is not None:
         return df.repartition(target, F.col(key))
     return df.repartition(target)
+
+
+def _list_array(M):
+    """(n, w) numpy -> Arrow list array of the n length-w rows: an
+    arrow_udf's array<...> result, built from the flat buffer."""
+    import numpy as np
+    import pyarrow as pa
+
+    n, w = M.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, (n + 1) * w, w, dtype=np.int32)), pa.array(M.ravel())
+    )

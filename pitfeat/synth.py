@@ -183,8 +183,9 @@ def gen_clustered_embeddings(
     ingly parallel, nothing driver-side but the (n_centers x dim) closure.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
+
+    from pitfeat.ops.util import _list_array
 
     rs = np.random.RandomState(seed)
     C = rs.normal(size=(n_centers, dim))
@@ -197,10 +198,8 @@ def gen_clustered_embeddings(
         x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
         return x ^ (x >> np.uint64(31))
 
-    def kernel(ids: pd.Series) -> pd.Series:
-        idv = ids.to_numpy(dtype=np.int64).astype(np.uint64)
-        if len(idv) == 0:
-            return pd.Series([], dtype=object)
+    def kernel(ids):
+        idv = ids.to_numpy().astype(np.uint64)
         j = np.arange(dim, dtype=np.uint64)[None, :]
         base = idv[:, None] * np.uint64(dim) + j + np.uint64(seed * 0x10001)
         with np.errstate(over="ignore"):
@@ -209,10 +208,9 @@ def gen_clustered_embeddings(
         g = np.sqrt(-2.0 * np.log(u1)) * np.cos(2.0 * np.pi * u2)
         E = C[(idv % np.uint64(n_centers)).astype(np.int64)] + noise * g
         E /= np.linalg.norm(E, axis=1, keepdims=True)
-        return pd.Series(list(E))
+        return _list_array(E)
 
-    kernel.__annotations__ = {"ids": pd.Series, "return": pd.Series}
-    udf = pandas_udf(kernel, "array<double>")
+    udf = arrow_udf(kernel, "array<double>")
     return spark.range(n_vecs).select(
         F.col("id").alias("vec_id"), udf("id").alias("embedding")
     )

@@ -87,13 +87,8 @@ def test_ann_plans_have_no_rowwise_python(spark):
     join)."""
     import numpy as np
 
-    from pitfeat.ops.similarity import (
-        _ivf_topk_pairjoin,
-        _lsh_topk_pairjoin,
-        cosine_topk,
-        ivf_topk,
-        lsh_topk,
-    )
+    from pitfeat.ops.similarity import cosine_topk, ivf_topk, lsh_topk
+    from tests.oracle_similarity import _ivf_topk_pairjoin, _lsh_topk_pairjoin
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = e.where(F.col("vec_id") < 3).select(
@@ -118,6 +113,57 @@ def test_ann_plans_have_no_rowwise_python(spark):
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" in plan
         assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+
+
+def test_text_kernels_are_arrow_udfs(spark, monkeypatch, tmp_path):
+    """Every Python text kernel — quality_score's counts, the minhash
+    signatures and hashed shingle sets of minhash_lsh_pairs (broadcast path
+    and the byte-gate-forced written path), simhash_near_pairs' signatures —
+    plans as a scalar arrow_udf (ArrowEvalPython eval type 250), never a
+    pandas_udf (200) and never a pandas map node. The signature and shingle
+    tables are written inside the calls, so the plans of those writes are
+    captured too."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from pitfeat.ops.dedup import minhash_lsh_pairs, simhash_near_pairs
+    from pitfeat.ops.text import quality_score
+
+    plans: list = []
+    write = DataFrameWriter.parquet
+
+    def capturing_write(self, path, *a, **kw):
+        plans.append(_plan(self._df))
+        return write(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capturing_write)
+    docs = spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("near duplicate document text number "), F.col("id") % 50).alias("text"),
+    )
+    # (call, number of its plans that evaluate a kernel): the minhash paths
+    # write signatures, then shingle in the final plan (broadcast) or in a
+    # second written table; simhash_near_pairs writes its signatures
+    calls = {
+        "quality_score": (lambda: quality_score(docs), 1),
+        "minhash_broadcast": (lambda: minhash_lsh_pairs(docs, num_hashes=16, bands=4), 2),
+        "minhash_written": (
+            lambda: minhash_lsh_pairs(
+                docs, num_hashes=16, bands=4, sig_path=str(tmp_path / "sig"),
+                small_corpus_bytes=10,
+            ),
+            2,
+        ),
+        "simhash_near_pairs": (lambda: simhash_near_pairs(docs), 1),
+    }
+    for name, (call, n_kernel_plans) in calls.items():
+        plans.clear()
+        plans.append(_plan(call()))
+        assert sum("ArrowEvalPython" in p for p in plans) == n_kernel_plans, name
+        evals = [t for p in plans for t in re.findall(r"ArrowEvalPython \[.*\], (\d+)", p)]
+        assert set(evals) == {"250"}, (name, evals)
+        assert not any("InPandas" in p for p in plans), name
 
 
 def test_knn_join_plans_never_materialize_pairs(spark):

@@ -9,6 +9,7 @@ from pitfeat.ops import dedup as D
 from pitfeat.ops import similarity as S
 from pitfeat.ops import text as X
 from pitfeat.ops.multimodal import decode_features, gen_media
+from tests import oracle_similarity as O
 
 
 @pytest.fixture(scope="module")
@@ -80,11 +81,15 @@ def test_quality_score_kernel_matches_expression_path(spark, docs):
     pins BIT-EXACT parity against the original pure-expression formulation
     (the r7 implementation, replicated inline) on the corpus plus planted
     edge shapes: null text, empty, whitespace-only, padded, punct-heavy,
-    stopword-heavy, single token."""
+    stopword-heavy, single token, a vertical tab (Java \\s) and a no-break
+    space (not Java \\s)."""
     edges = spark.createDataFrame(
         pd.DataFrame(
             {
-                "doc_id": [910001, 910002, 910003, 910004, 910005, 910006, 910007],
+                "doc_id": [
+                    910001, 910002, 910003, 910004, 910005, 910006, 910007, 910008,
+                    910009,
+                ],
                 "text": [
                     None,
                     "",
@@ -93,6 +98,8 @@ def test_quality_score_kernel_matches_expression_path(spark, docs):
                     "!!!???;;;[]{}`~^_\\|@#$%&*()-+=<>/.,:'\"",
                     "el la de que los le les des est der die und das ist",
                     "x",
+                    "x\x0by",
+                    "a\xa0b c",
                 ],
             }
         )
@@ -1016,17 +1023,17 @@ def test_matrix_engine_parity_with_pairjoin(spark, embs):
         )
 
     assert norm(SIM.cosine_topk(embs, qs, k=5)) == norm(
-        SIM._cosine_topk_pairjoin(embs, qs, k=5)
+        O._cosine_topk_pairjoin(embs, qs, k=5)
     )
     assert norm(SIM.lsh_topk(embs, qs, k=5, nbits=1, tables=16)) == norm(
-        SIM._lsh_topk_pairjoin(embs, qs, k=5, nbits=1, tables=16)
+        O._lsh_topk_pairjoin(embs, qs, k=5, nbits=1, tables=16)
     )
     C = SIM._kmeans_centroids(embs, "embedding", "vec_id", nlist=8, dim=64, seed=42)
     for nprobe in (2, 8):
         assert norm(
             SIM.ivf_topk(embs, qs, k=5, nlist=8, nprobe=nprobe, centroids=C)
         ) == norm(
-            SIM._ivf_topk_pairjoin(embs, qs, k=5, nlist=8, nprobe=nprobe, centroids=C)
+            O._ivf_topk_pairjoin(embs, qs, k=5, nlist=8, nprobe=nprobe, centroids=C)
         )
 
 
@@ -1055,7 +1062,7 @@ def test_matrix_engine_edge_semantics(spark):
         )
 
     got = norm(SIM.cosine_topk(corpus, qs, k=23, dim=8))
-    oracle = norm(SIM._cosine_topk_pairjoin(corpus, qs, k=23))
+    oracle = norm(O._cosine_topk_pairjoin(corpus, qs, k=23))
     assert got == oracle
     # duplicate pair: identical cosine, id-asc order
     q0 = [(vid, rank) for (q, vid, c, rank) in got if q == 0 and c == round(1.0, 9)]
@@ -1068,13 +1075,13 @@ def test_matrix_engine_edge_semantics(spark):
     assert got7 == got
 
     assert norm(SIM.lsh_topk(corpus, qs, k=23, nbits=2, tables=4, dim=8)) == norm(
-        SIM._lsh_topk_pairjoin(corpus, qs, k=23, nbits=2, tables=4, dim=8)
+        O._lsh_topk_pairjoin(corpus, qs, k=23, nbits=2, tables=4, dim=8)
     )
     C = np.eye(4, 8)
     assert norm(
         SIM.ivf_topk(corpus, qs, k=23, nlist=4, nprobe=2, dim=8, centroids=C)
     ) == norm(
-        SIM._ivf_topk_pairjoin(corpus, qs, k=23, nlist=4, nprobe=2, dim=8, centroids=C)
+        O._ivf_topk_pairjoin(corpus, qs, k=23, nlist=4, nprobe=2, dim=8, centroids=C)
     )
 
 
@@ -1106,12 +1113,12 @@ def test_matrix_engine_randomized_parity_sweep(spark):
         )
         for k in (1, 5, n + 10):
             assert norm(SIM.cosine_topk(corpus, qs, k=k, dim=dim)) == norm(
-                SIM._cosine_topk_pairjoin(corpus, qs, k=k)
+                O._cosine_topk_pairjoin(corpus, qs, k=k)
             ), (seed, "cosine", k)
             assert norm(
                 SIM.lsh_topk(corpus, qs, k=k, nbits=2, tables=3, dim=dim, seed=seed)
             ) == norm(
-                SIM._lsh_topk_pairjoin(
+                O._lsh_topk_pairjoin(
                     corpus, qs, k=k, nbits=2, tables=3, dim=dim, seed=seed
                 )
             ), (seed, "lsh", k)
@@ -1120,7 +1127,7 @@ def test_matrix_engine_randomized_parity_sweep(spark):
                     corpus, qs, k=k, nlist=4, nprobe=2, dim=dim, centroids=C
                 )
             ) == norm(
-                SIM._ivf_topk_pairjoin(
+                O._ivf_topk_pairjoin(
                     corpus, qs, k=k, nlist=4, nprobe=2, dim=dim, centroids=C
                 )
             ), (seed, "ivf", k)
@@ -1147,7 +1154,7 @@ def test_matrix_engine_degenerate_tie_flood(spark):
         )
 
     got = norm(SIM.cosine_topk(corpus.repartition(3), qs, k=10, dim=8))
-    oracle = norm(SIM._cosine_topk_pairjoin(corpus, qs, k=10))
+    oracle = norm(O._cosine_topk_pairjoin(corpus, qs, k=10))
     assert got == oracle
     assert [vid for (_, vid, _, _) in got] == list(range(10))  # pure id-asc
 
@@ -1174,7 +1181,7 @@ def test_matrix_engine_string_ids(spark):
         )
 
     got = norm(SIM.cosine_topk(corpus, qs, k=5, dim=8))
-    assert got == norm(SIM._cosine_topk_pairjoin(corpus, qs, k=5))
+    assert got == norm(O._cosine_topk_pairjoin(corpus, qs, k=5))
     top2 = [vid for (_, vid, _, rank) in got if rank <= 2]
     assert top2 == ["doc-005", "doc-900"]  # cosine tie -> id asc
 
@@ -1206,7 +1213,7 @@ def test_knn_join_exact_parity_and_semantics(spark):
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     got = _knn_norm(SIM.knn_join(corpus, k=5, method="exact", dim=8))
-    oracle = _knn_norm(SIM._knn_join_pairjoin(corpus, k=5, dim=8))
+    oracle = _knn_norm(O._knn_join_pairjoin(corpus, k=5, dim=8))
     assert got == oracle
     ids_out = {q for (q, _, _, _) in got} | {n for (_, n, _, _) in got}
     assert 101 not in ids_out and 102 not in ids_out
@@ -1409,7 +1416,7 @@ def test_matrix_engine_ragged_vector_parity(spark):
         )
 
     got = norm(SIM.cosine_topk(corpus, qs, k=4, dim=4))
-    oracle = norm(SIM._cosine_topk_pairjoin(corpus, qs, k=4))
+    oracle = norm(O._cosine_topk_pairjoin(corpus, qs, k=4))
     assert got == oracle
     by_rank = {rank: (vid, c) for (_, vid, c, rank) in got}
     assert by_rank[1] == (0, 1.0)
