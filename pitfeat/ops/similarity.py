@@ -1294,12 +1294,14 @@ def knn_join(
     return _knn_rank(cands, k, id_col, dedup=False)
 
 
-# Fewest (member, prober) pairs worth one kernel task. Starting a task that
-# evaluates Python costs ~0.2 CPU-s before the kernel runs (measured on a
-# 4-vCPU host: a trivial arrow_udf at 4, 64 and 256 partitions, worker CPU
-# read from /proc), and the kernel scores a pair in ~24 ns (7.6 s for ~312 M
-# pairs), so one start-up buys ~8 M pairs. 32 M pairs per task keeps the
-# kernel work ~4x the start-up cost.
+# Fewest (member, prober) pairs worth one kernel task, measured on a 4-vCPU
+# host. A knn_join kernel task costs ~0.1 CPU-s beyond its work; a trivial
+# arrow_udf task costs ~0.04, 0.018 of it in the Python worker (4, 64 and 256
+# partitions, CPU read from /proc). On a 312 M-pair corpus (50k vectors,
+# nlist 64, nprobe 8; the kernel scores a pair in ~24 ns) each extra task
+# added 0.06-0.2 CPU-s, and 10 tasks (32 M pairs each) beat 19, 25, 37 and 98
+# (16, 12, 8 and 3 M) in alternating runs. So a task costs ~4 M pairs of
+# kernel work; 32 M keeps the work ~8x what the task costs.
 MIN_PAIRS_PER_TASK = 32_000_000
 
 
@@ -1326,8 +1328,9 @@ def _ivf_grid_splits(
     the cells over ~4x as many partitions stops balls-in-bins collisions
     from stacking several hot cells on one straggler task (an sf1.0 corpus
     scores ~3x10^10 pairs, far above the floor, and gets it); a corpus whose
-    kernel work is small next to task start-up cost gets one task per core
-    instead, since each extra task costs more to start than it saves."""
+    kernel work is small next to what a task costs (~0.1 CPU-s, measured
+    above MIN_PAIRS_PER_TASK) gets one task per core instead, since each
+    extra task costs more than it saves."""
     from math import ceil
 
     rate = 16

@@ -1,5 +1,6 @@
-"""Edge cases and determinism for the fused text kernels (minhash, simhash)
-and a property-based as-of check (hypothesis over randomized frames)."""
+"""Edge cases and determinism for the fused text kernels (minhash, simhash),
+a property-based as-of check (hypothesis over randomized frames), and the
+Python worker daemon the kernels run under."""
 
 import datetime as dt
 
@@ -538,3 +539,59 @@ def test_knn_score_block_f32_prefilter_exact_selection():
     Vn = np.sqrt((V * V).sum(1))
     oq, oi, oc = _knn_score_block(V, Vn, ids, V[:50], Vn[:50], np.arange(50), 3, 16)
     assert list(oi[:3]) == [1, 2, 3] and len(oq) == 150
+
+
+def test_python_workers_fork_from_the_pitfeat_daemon(spark):
+    """Every Python task runs in a worker forked from ``pitfeat_daemon``: a
+    single-threaded parent (as Spark's stock daemon) whose
+    ``zipimporter.invalidate_caches`` is the no-op, so tasks stop
+    re-reading the zips on the worker's ``sys.path``."""
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+
+    def facts(ids):
+        import os
+        import zipimport
+
+        ppid = os.getppid()
+        with open(f"/proc/{ppid}/cmdline", "rb") as f:
+            cmd = f.read().replace(b"\0", b" ").decode()
+        inv = zipimport.zipimporter.invalidate_caches
+        fact = "|".join(
+            [
+                cmd,
+                str(len(os.listdir(f"/proc/{ppid}/task"))),
+                f"{inv.__name__}@{os.path.basename(inv.__code__.co_filename)}",
+            ]
+        )
+        return pa.array([fact] * len(ids))
+
+    rows = spark.range(0, 8, 1, 4).select(arrow_udf(facts, "string")("id").alias("f")).collect()
+    for fact in {r["f"] for r in rows}:
+        cmd, threads, inv = fact.split("|")
+        assert "-m pitfeat_daemon pyspark.worker" in cmd, cmd
+        assert threads == "1", fact
+        assert inv == "_keep_zip_directory@pitfeat_daemon.py", fact
+
+
+def test_add_py_file_zip_imports_after_session_start(spark, tmp_path):
+    """The daemon's no-op skips only re-reading zips already on a worker's
+    ``sys.path``: a zip shipped with ``sc.addPyFile`` after workers exist
+    lands under a new path, gets a new importer and imports."""
+    import zipfile
+
+    from pyspark.sql.functions import udf
+
+    spark.range(4).select(udf(lambda x: x, "long")("id")).collect()  # workers up
+    zpath = tmp_path / "pitfeat_late_dep.zip"
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("pitfeat_late_dep.py", "ANSWER = 'late-zip'\n")
+    spark.sparkContext.addPyFile(str(zpath))
+
+    def answer(x):
+        import pitfeat_late_dep
+
+        return pitfeat_late_dep.ANSWER
+
+    rows = spark.range(0, 8, 1, 4).select(udf(answer, "string")("id").alias("a")).collect()
+    assert {r["a"] for r in rows} == {"late-zip"}
