@@ -132,6 +132,7 @@ def _asof_query(
     salt: int = 0,
     tolerance_s: float | None = None,
     direction: str = "backward",
+    hot_threshold: int | None = None,
 ):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = _events(spark, sf_dir).select("event_id", "user_id", "ts")
@@ -139,7 +140,8 @@ def _asof_query(
         j = asof_join(
             ev, snaps, on="user_id", left_ts="ts", right_ts="snap_ts",
             allow_exact=allow_exact, strategy=strategy, salt_buckets=salt,
-            tolerance_s=tolerance_s, direction=direction,
+            hot_threshold=hot_threshold, tolerance_s=tolerance_s,
+            direction=direction,
         )
         return j.select(
             "event_id",
@@ -340,21 +342,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # --- J: joins ---
     q["j1_asof_backward"] = _asof_query("window")
     q["j1_asof_merge"] = _asof_query("merge")
-    # r5 rotation (VERDICT r4 #1): cogroup + nearest earned their driver-
-    # green rows in r4 and move back to the tail; their slots go to the
-    # entries whose only driver rows predate the r3 semantics strengthening
-    # (j5_anti/o4_except/v2, registered in their sections below) and to the
-    # round's NEW ops (j1_merge_forward here, s6_knn_exact below). The
-    # cogroup strategy keeps an in-cap row via j1_asof_forward; nearest
-    # keeps pytest + local-oracle coverage.
+    # in-cap as-of rows: both strategies in every direction (window backward/
+    # forward/nearest, merge backward/forward/nearest) plus blanket salting;
+    # strict, tolerance and targeted salting run in the tail entries below
     q["j1_merge_forward"] = _asof_query("merge", direction="forward")
     q["j2_asof_salted"] = _asof_query("window", salt=4)
-    # r6 rotation (VERDICT r5 #3): the window strategy's forward/nearest
-    # directions were registered straight to the tail in r5 and so — unlike
-    # every other entry — had ZERO historical driver rows; they take the cap
-    # slots of j1_asof_forward (cogroup/forward, driver-green r1-r5, now in
-    # the tail) and o2_topk_global. The cogroup strategy keeps in-cap
-    # representation via j1_asof_forward's five historical greens + pytest.
     q["j1_window_forward"] = _asof_query("window", direction="forward")
     q["j1_window_nearest"] = _asof_query("window", direction="nearest")
     # r7 rotation (VERDICT r6 #1): the four r6-NEW entries were registered
@@ -1087,15 +1079,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # query cap is likely. Entries below are ordered by decreasing
     # informativeness and every one has a DRIVER-green historical row plus a
     # sibling in-cap row or pytest covering the same operator family
-    # (j1_strict/tolerance ~ the in-cap backward/merge/forward rows,
-    # j1_cogroup/nearest green r4 with cogroup covered via j1_asof_forward,
+    # (j1_strict/tolerance/cogroup/nearest/forward ~ the in-cap window and
+    # merge rows of the same direction,
     # w7_role_ngram ~ w7_vocab_counts, a8_percentile ~ a8_rms_udaf, s3~s2,
     # d3 green r4 ~ d2, j5_semi green r1-r4 ~ j5_anti, o4_intersect green
     # r1-r4 ~ o4_except, w8 planted-dup identity, s6_knn_ivf ~ s6_knn_exact
     # + pytest bit-parity), so whatever a cap drops loses the least
     # evidence. r5 rotation (VERDICT r4 #1): j5_anti/o4_except/v2 graduated
     # to the cap (their old driver rows predated the r3 strengthening) along
-    # with the new j1_merge_forward and s6_knn_exact; cogroup/nearest/d3
+    # with the new j1_merge_forward and s6_knn_exact; d3
     # (driver-green r4) and the family-swapped j5_semi/o4_intersect took the
     # tail slots. Every tail entry still runs under tools/check_contract.py
     # (the same DuckDB-oracle machinery) at sf0.001 and sf0.01 each round.
@@ -1106,12 +1098,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # and some survive — 30d nulled nothing after the remap, just as
     # it nulled everything before it)
     q["j1_asof_tolerance"] = _asof_query("merge", tolerance_s=86400.0)
-    q["j1_asof_cogroup"] = _asof_query("cogroup")
-    q["j1_asof_nearest"] = _asof_query("cogroup", direction="nearest")
-    # r6 rotation (VERDICT r5 #3): j1_window_forward/nearest, s6_knn_ivf and
-    # a9_zscore graduated to the cap (zero driver rows before r6); the four
-    # displaced entries below are all driver-green r1-r5
-    q["j1_asof_forward"] = _asof_query("cogroup", direction="forward")
+    # three keys kept for their frozen oracles after the cogroup strategy was
+    # retired, each now on a window path the in-cap rows do not cover:
+    # targeted salting (users have 45-99 events, median ~66, at every sf, so
+    # a threshold of 70 sends some users down the salted path and the rest
+    # down the plain one) and salted forward/nearest
+    q["j1_asof_cogroup"] = _asof_query("window", salt=4, hot_threshold=70)
+    q["j1_asof_nearest"] = _asof_query("window", direction="nearest", salt=4)
+    q["j1_asof_forward"] = _asof_query("window", direction="forward", salt=4)
     # r7 rotation (VERDICT r6 #1): the four r6-new entries (j1_merge_nearest,
     # w12_ewma_time, d5_components, j4b_interval_pure) graduated to the cap;
     # the four displaced entries below are driver-green through r6 and keep

@@ -14,7 +14,7 @@ from dataclasses import asdict, dataclass, field
 @dataclass(frozen=True)
 class PitfeatConfig:
     # --- as-of join (J1/J2) ---
-    asof_strategy: str = "window"  # "window" (pure-JVM union-tag ffill, DEFAULT) | "cogroup" (bucketed applyInPandas binary search) | "merge" (streaming mapInPandas merge)
+    asof_strategy: str = "window"  # "window" (pure-JVM union-tag ffill, DEFAULT) | "merge" (streaming mapInPandas merge)
     asof_allow_exact: bool = True  # snap_ts <= ts when True, strict < when False
     asof_tolerance_s: float | None = None  # max staleness in seconds; None = unbounded
     salt_buckets: int = 0  # 0 = no salting; >0 = replicate right side x B (J2)
@@ -29,7 +29,6 @@ class PitfeatConfig:
 
     # --- normalization (A2-A4) ---
     prune_degenerate: bool = True
-    nan_passthrough: bool = True
 
     # --- DATABLOCK mirror (S5) ---
     rows_per_block: int = 4096

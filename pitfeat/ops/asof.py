@@ -6,22 +6,16 @@ Semantics: for each left row, attach the single right row with the greatest
 temporal leakage by construction: a right row with ``right_ts > left_ts`` can
 never be selected (property-tested in tests/test_asof.py).
 
-Three physical strategies, all vectorized (no per-row Python anywhere):
+Two physical strategies, both vectorized (no per-row Python anywhere):
 
 ``window`` (DEFAULT — matches the ``strategy`` parameter default below)
     Pure-JVM union-tag forward-fill: tag both sides, union, forward-fill the
     right value struct down a (key, ts, tag)-sorted window with
-    ``last(ignorenulls)``. Zero JVM<->Python transfer; measured ~10-30x
-    faster than the Python-kernel strategies. Spill-backed window sort, so
-    memory is bounded regardless of key heat.
-
-``cogroup``
-    ``left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas(kernel)``
-    where the kernel is a numpy binary search (``np.searchsorted``) over the
-    per-key sorted right timestamps. One shuffle per side; each key's data
-    meets in one Python worker. Scaling hazard: a single hot key must fit in
-    one worker's memory — mitigated by ``salt_buckets`` (J2) which replicates
-    the right side xB and splits the left by hash salt, bounding group size.
+    ``last(ignorenulls)``. Zero JVM<->Python transfer. Spill-backed window
+    sort, so memory is bounded regardless of key heat. Measured at sf0.1 on
+    ``local[4]`` (4 vCPU, medians of 3-5 reps), window vs merge: backward
+    0.55-0.58 vs 0.70 s, forward 0.56 vs 0.75 s, nearest 1.0-1.14 vs
+    1.2-1.3 s.
 
 ``merge``
     The "partitioned, sort-within-partition as-of merge": both sides are
@@ -43,7 +37,6 @@ Strategy x direction support matrix (ValueError outside it):
     =========  ========  =======  =======
     window     yes       yes      yes
     merge      yes       yes      yes
-    cogroup    yes       yes      yes
     =========  ========  =======  =======
 
     (merge/forward and window/forward: descending-ts variants of the same
@@ -55,14 +48,14 @@ Strategy x direction support matrix (ValueError outside it):
     row-local closer-one choice — see _asof_merge_nearest.)
 
 Tie rule: with ``allow_exact=True`` an equal-timestamp snapshot matches
-(searchsorted ``side='right'``; merge sorts right-before-left at equal ts).
-With ``allow_exact=False`` it does not (``side='left'``; left-before-right).
+(both strategies sort right-before-left at equal ts). With
+``allow_exact=False`` it does not (left-before-right).
 
 Duplicate right rows sharing (key, right_ts): the winner is the row with the
 GREATEST value tuple (lexicographic over the right value columns, nulls
-first) — every strategy appends the value columns to its right-side sort
-keys, so the choice is deterministic and identical across window/cogroup/
-merge, instead of "whatever the unstable shuffle order produced". Callers
+first) — both strategies append the value columns to their right-side sort
+keys, so the choice is deterministic and identical across window and merge,
+instead of "whatever the unstable shuffle order produced". Callers
 wanting a different resolution should pre-dedup the right side.
 
 Oracle parity: semantics match ``pandas.merge_asof(direction=...,
@@ -95,6 +88,15 @@ def _orderable(dt: T.DataType) -> bool:
     if isinstance(dt, T.ArrayType):
         return _orderable(dt.elementType)
     return True
+
+
+def _value_sort_key(struct_col: str, val_cols: list[str], typ: dict):
+    """Sort key for a struct of the right value columns: the struct itself,
+    or a struct of its orderable fields when any field is unorderable."""
+    ord_cols = [c for c in val_cols if _orderable(typ[c])]
+    if ord_cols == val_cols:
+        return F.col(struct_col)
+    return F.struct(*[F.col(struct_col)[c] for c in ord_cols])
 
 
 def _result_schema(left: DataFrame, right: DataFrame, on: str, right_ts: str) -> T.StructType:
@@ -139,15 +141,13 @@ def asof_join(
     the greatest ``right_ts <= left_ts`` (strict ``<`` when
     ``allow_exact=False``; earliest-following when ``direction='forward'``,
     closest-in-time when ``direction='nearest'`` (equidistant resolves to the
-    preceding row, matching pandas) — both cogroup strategy only).
-    Left-outer: unmatched rows keep nulls.
+    preceding row, matching pandas)). Left-outer: unmatched rows keep nulls.
 
     Parameters beyond the obvious:
     - ``tolerance_s``: staleness bound — a match older than this many seconds
       is nulled out (whole snapshot row, atomically).
     - ``strategy``: ``window`` (pure-JVM union-tag ffill, default) |
-      ``cogroup`` (bucketed applyInPandas merge_asof) | ``merge``
-      (range-partitioned streaming merge) — see module docstring.
+      ``merge`` (hash-partitioned streaming merge) — see module docstring.
     - ``salt_buckets``: J2 skew fanout. Alone it salts EVERY key (kept for
       the driver contract; measured 5x slower than unsalted on a 30%-hot
       zipf fixture because the right side replicates xB for all keys).
@@ -163,12 +163,11 @@ def asof_join(
         )
     # SQL-join null semantics, uniform across strategies: a right row with a
     # NULL key or NULL timestamp can never be "a snapshot at a known time for
-    # a known entity" — previously the window/merge strategies forward-filled
-    # such rows into real matches (an unknowable-age snapshot enriching a
-    # feature row = leakage-contract violation) and cogroup's merge_asof
-    # CRASHED on them. Left rows with NULL key/ts stay (left-outer: they come
-    # back with null right columns — the null-key window partition and the
-    # null pandas groupby key both find an empty right side after this).
+    # a known entity" — forward-filling such rows into real matches would
+    # enrich a feature row with an unknowable-age snapshot (a leakage-contract
+    # violation). Left rows with NULL key/ts stay (left-outer: they come back
+    # with null right columns — the null-key window partition finds an empty
+    # right side after this).
     right = right.where(F.col(on).isNotNull() & F.col(right_ts).isNotNull())
     if strategy == "window":
         impl = _asof_window_nearest if direction == "nearest" else _asof_window
@@ -197,25 +196,7 @@ def asof_join(
         return _asof_merge(
             left, right, on, left_ts, right_ts, allow_exact, tolerance_s, direction
         )
-    if strategy != "cogroup":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if salt_buckets > 0 and hot_threshold:
-        # targeted salting for the cogroup strategy (same sketch+split as the
-        # window path): blanket salting replicates the right side xB for every
-        # key — measured 5x slower than unsalted on a 30%-hot zipf fixture —
-        # while an unsplit hot key is exactly cogroup's memory hazard (one
-        # group = one in-worker pandas frame)
-        lh, lc, rh, rc = _split_hot_keys(left, right, on, hot_threshold)
-        cold = _asof_cogroup(
-            lc, rc, on, left_ts, right_ts, allow_exact, tolerance_s, direction, 0
-        )
-        hot = _asof_cogroup(
-            lh, rh, on, left_ts, right_ts, allow_exact, tolerance_s, direction, salt_buckets
-        )
-        return cold.unionByName(hot)
-    return _asof_cogroup(
-        left, right, on, left_ts, right_ts, allow_exact, tolerance_s, direction, salt_buckets
-    )
+    raise ValueError(f"unknown strategy {strategy!r}")
 
 
 def _split_hot_keys(left: DataFrame, right: DataFrame, on: str, hot_threshold: int):
@@ -236,17 +217,16 @@ def _split_hot_keys(left: DataFrame, right: DataFrame, on: str, hot_threshold: i
 
 
 # --------------------------------------------------------------------------
-# strategy (c, DEFAULT): pure-JVM union-tag window forward-fill
+# strategy window (DEFAULT): pure-JVM union-tag window forward-fill
 # --------------------------------------------------------------------------
 #
 # Tag both sides, union, and forward-fill the right-side value columns down a
 # (key, ts, tag)-sorted window with last(..., ignorenulls) — the
 # "range-partitioned, sort-within-partition as-of merge" realized entirely in
 # Tungsten: one Exchange + one Sort + one whole-stage-codegen'd Window, zero
-# JVM<->Python Arrow transfer. Measured ~10-30x faster than the Python-kernel
-# strategies at 2.8M rows because the full table never crosses the Python
-# boundary; the window executor streams sorted rows with spill, so memory is
-# bounded regardless of key heat.
+# JVM<->Python Arrow transfer (the full table never crosses the Python
+# boundary; timings vs merge in the module docstring); the window executor
+# streams sorted rows with spill, so memory is bounded regardless of key heat.
 #
 # Tie rule via the tag's sort position at equal ts: allow_exact sorts right
 # rows BEFORE left rows (tag 0 < 1) so an equal-timestamp snapshot is visible;
@@ -323,12 +303,7 @@ def _asof_window(
     # the greatest value tuple — deterministic, and free (no extra shuffle).
     # If any value column is unorderable (maps), sort by the orderable subset
     # instead of failing the whole join (_orderable docstring).
-    ord_cols = [c for c in right_val_cols if _orderable(typ[c])]
-    rv_sort = (
-        F.col("__rv")
-        if ord_cols == right_val_cols
-        else F.struct(*[F.col("__rv")[c] for c in ord_cols])
-    )
+    rv_sort = _value_sort_key("__rv", right_val_cols, typ)
     ts_sort = (
         F.col("__t").asc() if direction == "backward" else F.col("__t").desc_nulls_first()
     )
@@ -376,21 +351,22 @@ def _asof_window_nearest(
     latest-preceding and earliest-following snapshot, then a row-local
     expression picks the closer (equidistant -> preceding, pandas' rule).
 
-    Mechanics: right rows are first deduped per (key, ts) to the greatest
-    value tuple (the same pre-dedup the cogroup nearest kernel performs —
-    it collapses the side-dependent tie rules), then each surviving right
-    row enters the union TWICE with separate prev/next struct columns and
-    tags ordered so the exactness rule holds on both sides simultaneously:
-    allow_exact puts the prev-copy BEFORE left rows at equal ts (visible to
-    ``last`` over (unboundedPreceding, 0)) and the next-copy after
-    (invisible to ``first`` over (0, unboundedFollowing) is wrong-way-
-    round: it IS visible, harmlessly — prev already matches at distance 0
-    and equidistant prefers preceding); strict reverses the tag order so
-    equal-ts rights are visible to NEITHER frame. Memory/skew behavior is
-    the window strategy's: one exchange, spill-backed sort, salting
-    composes. Tolerance filters each side independently before the choice
-    — equivalent to pandas' nearest+tolerance because the nearest valid
-    candidate always has the smaller distance."""
+    Mechanics: each right row enters the union TWICE with separate
+    prev/next struct columns and tags ordered so the exactness rule holds
+    on both sides simultaneously: allow_exact puts the prev-copy BEFORE left
+    rows at equal ts (visible to ``last`` over (unboundedPreceding, 0)) and
+    the next-copy after (invisible to ``first`` over (0, unboundedFollowing)
+    is wrong-way-round: it IS visible, harmlessly — prev already matches at
+    distance 0 and equidistant prefers preceding); strict reverses the tag
+    order so equal-ts rights are visible to NEITHER frame. Duplicate right
+    rows at one (key, ts) follow the backward fill's rule on both sides:
+    prev structs sort ascending (``last`` takes the greatest tuple), next
+    structs descending (``first`` takes the greatest tuple), so no separate
+    dedup pass is needed. Memory/skew behavior is the window strategy's:
+    one exchange, spill-backed sort, salting composes. Tolerance filters
+    each side independently before the choice — equivalent to pandas'
+    nearest+tolerance because the nearest valid candidate always has the
+    smaller distance."""
     from pyspark.sql import Window
 
     out_schema = _result_schema(left, right, on, right_ts)
@@ -399,17 +375,6 @@ def _asof_window_nearest(
     right_val_cols = [f.name for f in right.schema.fields if f.name != on]
     pass_left = [c for c in left_cols if c not in (on, left_ts)]
     rv_type = T.StructType([T.StructField(c, typ[c], True) for c in right_val_cols])
-
-    # greatest-tuple dedup per (key, right_ts); arbitrary-but-consistent if
-    # no value column is orderable (documented _orderable limitation)
-    ord_cols = [c for c in right_val_cols if _orderable(typ[c])]
-    dedup_sort = [F.col(c).desc_nulls_last() for c in ord_cols] or [F.lit(0)]
-    dw = Window.partitionBy(on, right_ts).orderBy(*dedup_sort)
-    right = (
-        right.withColumn("__rn", F.row_number().over(dw))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
     prev_tag, left_tag, next_tag = (0, 1, 2) if allow_exact else (2, 1, 0)
     rv_struct = F.struct(*[F.col(c) for c in right_val_cols])
@@ -457,7 +422,15 @@ def _asof_window_nearest(
         .unionByName(rp.select(*cols_order))
         .unionByName(rn.select(*cols_order))
     )
-    order = [F.col("__t").asc(), F.col("__tag").asc()]
+    # value structs as trailing sort keys, as in _asof_window: among right
+    # rows tied on (key, ts), last(__pv) and first(__nv) both pick the
+    # greatest value tuple
+    order = [
+        F.col("__t").asc(),
+        F.col("__tag").asc(),
+        _value_sort_key("__pv", right_val_cols, typ).asc(),
+        _value_sort_key("__nv", right_val_cols, typ).desc_nulls_last(),
+    ]
     wp = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -496,157 +469,7 @@ def _asof_window_nearest(
 
 
 # --------------------------------------------------------------------------
-# strategy (a): bucketed cogroup + applyInPandas, vectorized binary search
-# --------------------------------------------------------------------------
-#
-# Keys are hashed into a bounded number of buckets and the cogroup runs on the
-# BUCKET, not the raw key: one Python kernel call handles many keys at once
-# via a multi-key binary-search merge (pandas merge_asof with by=, C-level).
-# Rationale: per-key cogroup pays one Arrow round-trip per key — measured 23s
-# vs 2s for 1500 keys / 100k rows at sf0.1 — and per-key group sizes are
-# exactly the skew hazard. Buckets even that out and make the group count
-# independent of key cardinality (10^9 convs still = n_buckets groups).
-
-
-def _asof_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    allow_exact: bool,
-    tolerance_s: float | None,
-    direction: str,
-    salt_buckets: int,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    out_schema = _result_schema(left, right, on, right_ts)
-    left_cols = [f.name for f in left.schema.fields]
-    right_val_cols = [f.name for f in right.schema.fields if f.name != on]
-    # tie-break sort keys: orderable columns only (maps are unsortable in
-    # pandas too — dict comparisons raise); values still flow through
-    rtyp = {f.name: f.dataType for f in right.schema.fields}
-    ord_val_cols = [c for c in right_val_cols if _orderable(rtyp[c])]
-    out_names = [f.name for f in out_schema.fields]
-    tol_ns = None if tolerance_s is None else int(tolerance_s * 1e9)
-
-    def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        """Multi-key vectorized as-of: binary-search merge over per-key sorted
-        ts arrays (pandas merge_asof C kernel; never a per-row Python loop)."""
-        lpdf = lpdf[left_cols]
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        if len(rpdf) == 0:
-            out = lpdf.copy()
-            for c in right_val_cols:
-                out[c] = pd.NaT if c == right_ts else np.nan
-            return out[out_names]
-        l = lpdf.copy()
-        # right key arrives renamed __rk: Spark's cogroup drops right-side
-        # columns whose names duplicate left-side ones
-        r = rpdf[["__rk"] + right_val_cols].rename(columns={"__rk": on})
-        l["__lts"] = pd.to_datetime(l[left_ts]).astype("datetime64[ns]")
-        r["__rts"] = pd.to_datetime(r[right_ts]).astype("datetime64[ns]")
-        # left rows with NULL ts: merge_asof refuses null merge keys (it
-        # would abort the whole job); route them around the merge and emit
-        # them left-outer style with null right columns, matching what the
-        # window/merge strategies produce for the same rows
-        lnull = l[l["__lts"].isna()]
-        l = l[l["__lts"].notna()]
-        if len(l) == 0:
-            out = lnull.drop(columns="__lts")
-            for c in right_val_cols:
-                out[c] = pd.NaT if c == right_ts else np.nan
-            return out[out_names]
-        l = l.sort_values("__lts", kind="mergesort")
-        # value columns as trailing sort keys so duplicate right rows at equal
-        # (key, ts) resolve to the GREATEST value tuple in both directions:
-        # merge_asof keeps the LAST tie going backward (=> sort values
-        # ascending, nulls first) but the FIRST tie going forward (=> sort
-        # values descending, nulls last). Without the direction split,
-        # forward picked the SMALLEST tuple (ADVICE r2).
-        if direction == "forward":
-            r = r.sort_values(
-                ["__rts"] + ord_val_cols,
-                kind="mergesort",
-                ascending=[True] + [False] * len(ord_val_cols),
-                na_position="last",
-            )
-        elif direction == "nearest":
-            # nearest keeps the LAST tie on the backward side but the FIRST
-            # on the forward side, so no single sort order yields the
-            # greatest-tuple rule on both sides. Instead: pre-dedup right
-            # rows per (key, ts) to the greatest value tuple — after which
-            # pandas' side rules have nothing left to choose between, and
-            # only its documented equidistant rule (prefer preceding) acts.
-            r = r.sort_values(
-                ["__rts"] + ord_val_cols, kind="mergesort", na_position="first"
-            )
-            r = r.drop_duplicates(subset=[on, "__rts"], keep="last")
-        else:
-            r = r.sort_values(
-                ["__rts"] + ord_val_cols, kind="mergesort", na_position="first"
-            )
-        kw = {}
-        if tol_ns is not None:
-            kw["tolerance"] = pd.Timedelta(tol_ns, unit="ns")
-        out = pd.merge_asof(
-            l,
-            r,
-            left_on="__lts",
-            right_on="__rts",
-            by=on,
-            direction=direction,
-            allow_exact_matches=allow_exact,
-            **kw,
-        )
-        out = out[out_names]
-        if len(lnull):
-            extra = lnull.drop(columns="__lts")
-            for c in right_val_cols:
-                extra[c] = pd.NaT if c == right_ts else np.nan
-            out = pd.concat([out, extra[out_names]], ignore_index=True)
-        return out
-
-    if n_buckets is None:
-        sc = left.sparkSession.sparkContext
-        n_buckets = max(int(sc.defaultParallelism) * 4, 32)
-
-    if salt_buckets > 0:
-        # hot-key variant (J2): left rows spread over B salts, right replicated
-        # xB — bounds the size of any single (bucket, salt) group even when one
-        # key dominates; still bucketed so group count stays O(buckets x B)
-        b = salt_buckets
-        lft = left.withColumn(
-            "__b", F.pmod(F.xxhash64(F.col(on)), F.lit(n_buckets)).cast("int")
-        ).withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(on), F.col(left_ts)), F.lit(b)).cast("int")
-        )
-        rgt = (
-            right.withColumnRenamed(on, "__rk")
-            .withColumn("__b", F.pmod(F.xxhash64(F.col("__rk")), F.lit(n_buckets)).cast("int"))
-            .withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(b)])))
-            .withColumn("__salt", F.col("__salt").cast("int"))
-        )
-        return (
-            lft.groupBy("__b", "__salt")
-            .cogroup(rgt.groupBy("__b", "__salt"))
-            .applyInPandas(lambda l, r: kernel(l, r), schema=out_schema)
-        )
-
-    lft = left.withColumn("__b", F.pmod(F.xxhash64(F.col(on)), F.lit(n_buckets)).cast("int"))
-    rgt = right.withColumnRenamed(on, "__rk").withColumn(
-        "__b", F.pmod(F.xxhash64(F.col("__rk")), F.lit(n_buckets)).cast("int")
-    )
-    return (
-        lft.groupBy("__b")
-        .cogroup(rgt.groupBy("__b"))
-        .applyInPandas(lambda l, r: kernel(l, r), schema=out_schema)
-    )
-
-
-# --------------------------------------------------------------------------
-# strategy (b): range-partitioned, sort-within-partition streaming merge
+# strategy merge: hash-partitioned, sort-within-partition streaming merge
 # --------------------------------------------------------------------------
 
 
@@ -671,8 +494,8 @@ def _asof_merge(
     needs the equal-ts right row visible BEFORE the left row in stream order
     in either direction. Duplicate right rows at equal (key, ts) keep the
     greatest value tuple in both directions (Spark asc sort = nulls first,
-    ffill takes the last seen — matching cogroup's forward rule, which sorts
-    values desc and lets merge_asof keep the FIRST tie). Only the staleness
+    ffill takes the last seen — the same winner as the window strategy).
+    Only the staleness
     sign differs: a forward match is stale when right_ts - left_ts > tol."""
     out_schema = _result_schema(left, right, on, right_ts)
     left_cols = [f.name for f in left.schema.fields]
@@ -815,13 +638,12 @@ def _asof_merge_nearest(
     which attaches the earliest-following candidate under ``__f_*`` names
     (the ``__b_*`` columns ride through as inert left payload). A final
     pure-column projection picks the closer candidate row-atomically —
-    equidistant -> preceding, the same rule as _asof_window_nearest and the
-    cogroup kernel (pandas' rule), pinned by the randomized three-strategy
-    parity test. Each pass is the merge kernel itself, so the hot-key story
+    equidistant -> preceding, the same rule as _asof_window_nearest
+    (pandas' rule), pinned by the randomized parity test against a pandas
+    reference. Each pass is the merge kernel itself, so the hot-key story
     is unchanged: worker memory stays O(Arrow batch + 1 carried row) per
-    pass regardless of key heat — this is the nearest-direction path a
-    pathologically hot key could not take through window (single-task sort
-    pressure is spill-backed there, but cogroup would OOM).
+    pass regardless of key heat, where window's nearest sorts a hot key in
+    one (spill-backed) task.
 
     allow_exact/tolerance need no extra handling: each leg applies its own
     exactness tie rule and staleness filter, so an equal-ts snapshot

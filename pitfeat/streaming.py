@@ -6,11 +6,10 @@ The batch engine is the contract; these keep the design streaming-compatible:
   (Spark's native gap-merge session operator) with a watermark bounding state.
 - ``stream_dedup``       — W8 via ``dropDuplicatesWithinWatermark``.
 - ``stream_rolling``     — W3/W4 analogue: watermarked sliding-window aggs.
-- ``stream_asof_features`` — J1's streaming analogue: per-conv running
-  latest-snapshot state via ``transformWithStateInPandas`` is the full design;
-  here implemented with ``applyInPandasWithState``-free composition (union +
-  stateless window inside a foreachBatch is the pragmatic production pattern),
-  exposed as a micro-batch transformation usable under ``foreachBatch``.
+- ``stream_pit_features`` — J1's full streaming form: per-conv snapshot
+  history in ``applyInPandasWithState`` state, binary search per turn.
+- ``asof_features_microbatch`` — J1 as a micro-batch transformation usable
+  under ``foreachBatch`` (stateless as-of join against a snapshot table).
 
 All functions take/return DataFrames so they compose with ``readStream`` ->
 ``writeStream`` pipelines; tests drive them with file sources and the
@@ -82,7 +81,7 @@ def stream_rolling(
 
 
 def _pit_state_kernel(pdf, carried, key_name, extras, feats, max_hist=128):
-    """Shared per-(key, micro-batch) kernel for both stateful impls.
+    """Per-(key, micro-batch) kernel of ``stream_pit_features``.
 
     State is the conv's snapshot HISTORY (last ``max_hist`` snapshots as
     parallel arrays), not just the newest snapshot: a turn is matched by
@@ -138,43 +137,6 @@ def _pit_state_kernel(pdf, carried, key_name, extras, feats, max_hist=128):
     return (out if len(out) else None), new_state
 
 
-def _make_tws_processor(feature_cols, extra_cols, key_col):
-    """StatefulProcessor (transformWithStateInPandas) wrapping the shared
-    kernel with a per-conv ValueState. NOTE: the TWS state server speaks
-    protobuf; on clusters without the ``protobuf`` Python package (like this
-    sandbox) use impl='state' (applyInPandasWithState), which rides the
-    plain Arrow channel and needs nothing extra."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    feats = list(feature_cols)
-    extras = list(extra_cols)
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            sch = "snap_t_us array<long>, " + ", ".join(
-                f"{f} array<double>" for f in feats
-            )
-            self._latest = handle.getValueState("snap_history", sch)
-
-        def handleInputRows(self, key, rows, timer_values):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            carried = self._latest.get() if self._latest.exists() else None
-            out, new_state = _pit_state_kernel(pdf, carried, key_col, extras, feats)
-            if new_state is not None:
-                self._latest.update(new_state)
-            if out is not None:
-                yield out
-
-        def close(self) -> None:
-            pass
-
-    return Proc()
-
-
 def stream_pit_features(
     turns: DataFrame,
     snapshots: DataFrame,
@@ -183,7 +145,6 @@ def stream_pit_features(
     left_ts: str = "ts",
     right_ts: str = "snap_ts",
     extra_cols: tuple[str, ...] = ("turn_idx",),
-    impl: str = "state",
 ) -> DataFrame:
     """J1's full streaming form (SURVEY §2.10 custom state): running
     point-in-time features via a custom stateful operator.
@@ -199,20 +160,11 @@ def stream_pit_features(
     a wrong one), and a turn already emitted is not retroactively rewritten
     when an older snapshot arrives later (append-mode semantics).
 
-    ``impl``:
-    - ``"state"`` (default): ``applyInPandasWithState`` + GroupState — plain
-      Arrow channel, runs anywhere PySpark runs. Tested in this sandbox.
-    - ``"tws"``: ``transformWithStateInPandas`` + ValueState — the Spark-4
-      operator with RocksDB-backed per-variable state. Its state server
-      requires the ``protobuf`` Python package (absent in this sandbox, so
-      this path is exercised only on clusters that have it) plus
-      ``spark.sql.streaming.stateStore.providerClass =
-      org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``.
-
-    Both impls share one numpy kernel (``_pit_state_kernel``), so semantics
-    are identical. Timestamps travel as epoch-microsecond longs through the
-    state store and are rebuilt at the edge — immune to tz/NaT round-trip
-    surprises.
+    The operator is ``applyInPandasWithState`` + GroupState over the plain
+    Arrow channel, so it runs anywhere PySpark runs; the per-group work is
+    one numpy kernel (``_pit_state_kernel``). Timestamps travel as
+    epoch-microsecond longs through the state store and are rebuilt at the
+    edge — immune to tz/NaT round-trip surprises.
     """
     extras = list(extra_cols)
     extra_types = {
@@ -250,40 +202,29 @@ def stream_pit_features(
         + ["t_us long", "snap_t_us long"]
         + [f"{f} double" for f in feature_cols]
     )
-    if impl == "tws":
-        proc = _make_tws_processor(feature_cols, extras, key)
-        out = unioned.groupBy(key).transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-        )
-    elif impl == "state":
-        import pandas as pd
+    import pandas as pd
 
-        feats = list(feature_cols)
-        state_schema = "snap_t_us array<long>, " + ", ".join(
-            f"{f} array<double>" for f in feats
-        )
+    feats = list(feature_cols)
+    state_schema = "snap_t_us array<long>, " + ", ".join(
+        f"{f} array<double>" for f in feats
+    )
 
-        def fn(group_key, pdfs, state):
-            pdf = pd.concat(list(pdfs), ignore_index=True)
-            carried = state.get if state.exists else None
-            out_pdf, new_state = _pit_state_kernel(pdf, carried, key, extras, feats)
-            if new_state is not None:
-                state.update(new_state)
-            if out_pdf is not None:
-                yield out_pdf
+    def fn(group_key, pdfs, state):
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        carried = state.get if state.exists else None
+        out_pdf, new_state = _pit_state_kernel(pdf, carried, key, extras, feats)
+        if new_state is not None:
+            state.update(new_state)
+        if out_pdf is not None:
+            yield out_pdf
 
-        out = unioned.groupBy(key).applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-    else:
-        raise ValueError(f"impl must be 'state' or 'tws', got {impl!r}")
+    out = unioned.groupBy(key).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf="NoTimeout",
+    )
     return out.select(
         key,
         *extras,

@@ -40,6 +40,49 @@ def asof_oracle(
     return out.sort_values([on, "turn_idx"]).reset_index(drop=True)
 
 
+def asof_dedup_oracle(
+    left: pd.DataFrame,
+    right: pd.DataFrame,
+    on: str = "conv_id",
+    left_ts: str = "ts",
+    right_ts: str = "snap_ts",
+    allow_exact: bool = True,
+    tolerance_s: float | None = None,
+    direction: str = "backward",
+) -> pd.DataFrame:
+    """The engine's full as-of contract in pandas, for right sides WITH
+    duplicate (key, right_ts) rows and left sides with null timestamps.
+
+    Right rows are first deduped per (key, right_ts) to the greatest value
+    tuple (value columns compared left to right, nulls first); after that
+    pandas' direction-dependent tie rules have nothing to choose between.
+    Left rows with a null ts stay unmatched. Rows come back in ``left``'s
+    order with ``left``'s columns followed by the right value columns."""
+    vals = [c for c in right.columns if c != on]
+    r = right.dropna(subset=[on, right_ts]).sort_values(
+        [on, right_ts] + [c for c in vals if c != right_ts],
+        kind="mergesort",
+        na_position="first",
+    )
+    r = r.drop_duplicates(subset=[on, right_ts], keep="last")
+    known = left[left_ts].notna()
+    kw = {}
+    if tolerance_s is not None:
+        kw["tolerance"] = pd.Timedelta(seconds=tolerance_s)
+    matched = pd.merge_asof(
+        left[known].reset_index().sort_values(left_ts, kind="mergesort"),
+        r.sort_values(right_ts, kind="mergesort"),
+        left_on=left_ts,
+        right_on=right_ts,
+        by=on,
+        direction=direction,
+        allow_exact_matches=allow_exact,
+        **kw,
+    )
+    out = pd.concat([matched, left[~known].reset_index()], ignore_index=True)
+    return out.set_index("index").sort_index()[list(left.columns) + vals]
+
+
 def gap_oracle(t: pd.DataFrame) -> pd.Series:
     t = t.sort_values(["conv_id", "turn_idx"])
     return t.groupby("conv_id")["ts"].transform(

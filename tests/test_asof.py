@@ -6,14 +6,18 @@ import pytest
 
 from pitfeat.ops.asof import asof_join
 from pitfeat.schema import snapshot_feature_cols
-from tests.oracle_pandas import asof_oracle
+from tests.oracle_pandas import asof_dedup_oracle, asof_oracle
 
 FEATS = snapshot_feature_cols()
 KEYS = ["conv_id", "turn_idx"]
 
 
+def _sorted(pdf):
+    return pdf.sort_values(KEYS).reset_index(drop=True)
+
+
 def _collect_sorted(df):
-    return df.toPandas().sort_values(KEYS).reset_index(drop=True)
+    return _sorted(df.toPandas())
 
 
 def _assert_matches_oracle(spark_out: pd.DataFrame, oracle: pd.DataFrame):
@@ -30,7 +34,7 @@ def _assert_matches_oracle(spark_out: pd.DataFrame, oracle: pd.DataFrame):
         )
 
 
-@pytest.mark.parametrize("strategy", ["window", "cogroup", "merge"])
+@pytest.mark.parametrize("strategy", ["window", "merge"])
 @pytest.mark.parametrize("allow_exact", [True, False])
 def test_asof_matches_merge_asof(
     transcripts, snapshots, transcripts_pd, snapshots_pd, strategy, allow_exact
@@ -42,7 +46,7 @@ def test_asof_matches_merge_asof(
     _assert_matches_oracle(out, oracle)
 
 
-@pytest.mark.parametrize("strategy", ["window", "cogroup", "merge"])
+@pytest.mark.parametrize("strategy", ["window", "merge"])
 def test_asof_tolerance(transcripts, snapshots, transcripts_pd, snapshots_pd, strategy):
     out = _collect_sorted(
         asof_join(transcripts, snapshots, tolerance_s=120.0, strategy=strategy)
@@ -57,7 +61,7 @@ def test_asof_salted_equals_unsalted(transcripts, snapshots):
     pd.testing.assert_frame_equal(base, salted)
 
 
-@pytest.mark.parametrize("strategy", ["window", "cogroup", "merge"])
+@pytest.mark.parametrize("strategy", ["window", "merge"])
 def test_zero_temporal_leakage(transcripts, snapshots, strategy):
     """No output row may carry a snapshot from its future; and deleting the
     future must not change any feature (SURVEY.md §5 item 2)."""
@@ -92,14 +96,15 @@ def test_left_rows_preserved(transcripts, snapshots):
 
 
 def test_no_row_python_in_plan(transcripts, snapshots):
-    """Plan-shape invariant (SURVEY.md §4): vectorized nodes only."""
+    """Plan-shape invariant (SURVEY.md §4): vectorized nodes only, and no
+    grouped pandas kernel in any strategy."""
     for strategy, node in [
-        ("cogroup", "FlatMapCoGroupsInPandas"),
         ("merge", "MapInPandas"),
         ("window", "Window"),
     ]:
         plan = asof_join(transcripts, snapshots, strategy=strategy)._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan
+        assert "FlatMapCoGroupsInPandas" not in plan
         assert node in plan
     # the r5 window directions stay pure JVM: no Python node of any kind
     for direction in ("forward", "nearest"):
@@ -128,9 +133,9 @@ def test_duplicate_right_rows_deterministic(spark):
     )
     winners = {
         s: asof_join(left, right, strategy=s).collect()[0]["val"]
-        for s in ("window", "cogroup", "merge")
+        for s in ("window", "merge")
     }
-    assert winners == {"window": 30.0, "cogroup": 30.0, "merge": 30.0}
+    assert winners == {"window": 30.0, "merge": 30.0}
 
 
 def test_targeted_salting_equals_unsalted(transcripts, snapshots):
@@ -150,10 +155,9 @@ def test_targeted_salting_equals_unsalted(transcripts, snapshots):
 
 
 def test_duplicate_right_rows_deterministic_forward(spark):
-    """Forward direction (cogroup) must ALSO resolve equal-(key, ts) right
-    duplicates to the greatest value tuple: merge_asof keeps the FIRST tie
-    going forward, so the kernel sorts value columns descending there
-    (ADVICE r2 — it previously returned the smallest tuple, 10.0)."""
+    """Forward direction must ALSO resolve equal-(key, ts) right duplicates
+    to the greatest value tuple in both strategies (ADVICE r2 — a forward
+    kernel once returned the smallest tuple, 10.0)."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1, 14, 0, 0)
@@ -164,43 +168,22 @@ def test_duplicate_right_rows_deterministic_forward(spark):
         [("c1", t0, 10.0), ("c1", t0, 30.0), ("c1", t0, 20.0)],
         "conv_id string, snap_ts timestamp, val double",
     )
-    out = asof_join(left, right, strategy="cogroup", direction="forward").collect()
-    assert out[0]["val"] == 30.0
-
-
-def test_targeted_salting_equals_unsalted_cogroup(transcripts, snapshots):
-    """K2 targeted salting through the COGROUP strategy: hot keys take the
-    salted cogroup, cold keys the plain one; the union must equal the
-    unsalted cogroup join (VERDICT r2 missing #1 — cogroup previously only
-    had blanket salting)."""
-    base = _collect_sorted(asof_join(transcripts, snapshots, strategy="cogroup"))
-    targeted = _collect_sorted(
-        asof_join(
-            transcripts, snapshots, strategy="cogroup", salt_buckets=4, hot_threshold=5
-        )
-    )
-    pd.testing.assert_frame_equal(base, targeted)
-
-
-def test_nearest_matches_pandas(transcripts, snapshots, transcripts_pd, snapshots_pd):
-    """direction='nearest' (cogroup) against the pandas merge_asof oracle."""
-    out = _collect_sorted(
-        asof_join(transcripts, snapshots, strategy="cogroup", direction="nearest")
-    )
-    oracle = asof_oracle(transcripts_pd, snapshots_pd, direction="nearest")
-    _assert_matches_oracle(out, oracle)
+    for strategy in ("window", "merge"):
+        out = asof_join(left, right, strategy=strategy, direction="forward").collect()
+        assert out[0]["val"] == 30.0, strategy
 
 
 def test_nearest_duplicates_and_equidistant_deterministic(spark):
     """nearest must (a) resolve duplicate right rows at one (key, ts) to the
-    GREATEST value tuple whichever side of the left ts they fall on (the
-    kernel pre-dedups the right side — pandas' own side-dependent tie rules
-    never see a duplicate), and (b) prefer the PRECEDING row when two
-    distinct timestamps are equidistant (the pandas rule)."""
+    GREATEST value tuple whichever side of the left ts they fall on, and
+    (b) prefer the PRECEDING row when two distinct timestamps are
+    equidistant (the pandas rule) — in both strategies."""
     import datetime as dt
 
     t13 = dt.datetime(2024, 1, 1, 13, 0, 0)
-    left = spark.createDataFrame([("c1", t13), ("c2", t13)], "conv_id string, ts timestamp")
+    left = spark.createDataFrame(
+        [("c1", t13), ("c2", t13), ("c3", t13)], "conv_id string, ts timestamp"
+    )
     t12, t14 = dt.datetime(2024, 1, 1, 12, 0, 0), dt.datetime(2024, 1, 1, 14, 0, 0)
     right = spark.createDataFrame(
         [
@@ -208,14 +191,17 @@ def test_nearest_duplicates_and_equidistant_deterministic(spark):
             ("c1", t14, 10.0), ("c1", t14, 30.0), ("c1", t14, 20.0),
             # c2: equidistant before/after -> preceding (5.0) must win
             ("c2", t12, 5.0), ("c2", t14, 7.0),
+            # c3: duplicates strictly BEFORE the left ts (backward side)
+            ("c3", t12, 30.0), ("c3", t12, 10.0), ("c3", t12, 20.0),
         ],
         "conv_id string, snap_ts timestamp, val double",
     )
-    out = {
-        r["conv_id"]: r["val"]
-        for r in asof_join(left, right, strategy="cogroup", direction="nearest").collect()
-    }
-    assert out == {"c1": 30.0, "c2": 5.0}
+    for strategy in ("window", "merge"):
+        out = {
+            r["conv_id"]: r["val"]
+            for r in asof_join(left, right, strategy=strategy, direction="nearest").collect()
+        }
+        assert out == {"c1": 30.0, "c2": 5.0, "c3": 30.0}, strategy
 
 
 def test_asof_default_strategy_documented_and_pinned():
@@ -230,9 +216,30 @@ def test_asof_default_strategy_documented_and_pinned():
     assert inspect.signature(A.asof_join).parameters["strategy"].default == "window"
     assert "``window`` (DEFAULT" in A.__doc__
     for line in ("window     yes       yes      yes",
-                 "merge      yes       yes      yes",  # r6: matrix complete
-                 "cogroup    yes       yes      yes"):
+                 "merge      yes       yes      yes"):  # r6: matrix complete
         assert line in A.__doc__
+
+
+def test_retired_cogroup_strategy_raises_before_any_job(spark, transcripts, snapshots):
+    """``cogroup`` is no longer a strategy: asof_join and a Pipeline whose
+    config names it raise ValueError at plan-build time, and no Spark job
+    starts in their job group."""
+    from pitfeat.config import PitfeatConfig
+    from pitfeat.pipeline import Pipeline
+
+    sc = spark.sparkContext
+    group = "asof-retired-cogroup"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="unknown strategy 'cogroup'"):
+            asof_join(transcripts, snapshots, strategy="cogroup")
+        pipe = Pipeline.from_df(spark, transcripts, PitfeatConfig(asof_strategy="cogroup"))
+        with pytest.raises(ValueError, match="unknown strategy 'cogroup'"):
+            pipe.asof_snapshots(snapshots)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 # ---- forward direction for merge (VERDICT r4 #4) + window (r5) ----
@@ -277,10 +284,12 @@ def test_forward_tolerance(
 
 
 def test_merge_forward_equals_cogroup_randomized(spark):
-    """merge/forward AND window/forward == cogroup/forward on randomized
-    frames with planted equal-ts ties, duplicate right rows
-    (greatest-tuple rule), null left timestamps (must stay unmatched — the
-    desc_nulls_first edge) and keys with no right side at all."""
+    """merge/forward AND window/forward == the pandas reference
+    (``asof_dedup_oracle``: the logic of the retired cogroup kernel this test
+    is named for, without its buckets) on randomized frames with planted
+    equal-ts ties, duplicate right rows (greatest-tuple rule), null left
+    timestamps (must stay unmatched — the desc_nulls_first edge) and keys
+    with no right side at all."""
     rs = np.random.RandomState(19)
     n_keys, rows = 12, 400
     lrows = []
@@ -304,11 +313,10 @@ def test_merge_forward_equals_cogroup_randomized(spark):
     right = spark.createDataFrame(
         rrows, "conv_id string, snap_ts timestamp, f_a double, f_b double"
     )
+    lpdf, rpdf = left.toPandas(), right.toPandas()
     for allow_exact in (True, False):
-        c = _collect_sorted(
-            asof_join(left, right, allow_exact=allow_exact,
-                      strategy="cogroup", direction="forward")
-        )
+        c = _sorted(asof_dedup_oracle(lpdf, rpdf, allow_exact=allow_exact,
+                                      direction="forward"))
         for strategy in ("merge", "window"):
             m = _collect_sorted(
                 asof_join(left, right, allow_exact=allow_exact,
@@ -337,8 +345,10 @@ def test_window_nearest_matches_pandas(
 
 def test_window_nearest_equals_cogroup_randomized(spark):
     """window/nearest AND merge/nearest (r6 — the last strategy x direction
-    matrix hole) == cogroup/nearest on randomized frames: equal-ts
-    duplicate right rows (greatest-tuple pre-dedup), equidistant pairs
+    matrix hole) == the pandas reference (``asof_dedup_oracle``: the logic of
+    the retired cogroup kernel this test is named for, without its buckets)
+    on randomized frames: equal-ts duplicate right rows (greatest-tuple
+    rule), equidistant pairs
     (prefer preceding), strict exactness, tolerance, null left timestamps
     (must stay unmatched — the next-frame would otherwise hand them the
     first snapshot in sort order), and right-less keys."""
@@ -365,12 +375,11 @@ def test_window_nearest_equals_cogroup_randomized(spark):
     right = spark.createDataFrame(
         rrows, "conv_id string, snap_ts timestamp, f_a double, f_b double"
     )
+    lpdf, rpdf = left.toPandas(), right.toPandas()
     for allow_exact in (True, False):
         for tol in (None, 90.0):
-            c = _collect_sorted(
-                asof_join(left, right, allow_exact=allow_exact, tolerance_s=tol,
-                          strategy="cogroup", direction="nearest")
-            )
+            c = _sorted(asof_dedup_oracle(lpdf, rpdf, allow_exact=allow_exact,
+                                          tolerance_s=tol, direction="nearest"))
             for strategy in ("window", "merge"):
                 w = _collect_sorted(
                     asof_join(left, right, allow_exact=allow_exact, tolerance_s=tol,

@@ -33,7 +33,7 @@ def mixed_null_snapshots(spark, transcripts):
     return out.cache()
 
 
-@pytest.mark.parametrize("strategy", ["window", "cogroup", "merge"])
+@pytest.mark.parametrize("strategy", ["window", "merge"])
 def test_row_atomic_fill(transcripts, transcripts_pd, mixed_null_snapshots, strategy):
     out = (
         asof_join(transcripts, mixed_null_snapshots, strategy=strategy)
@@ -78,7 +78,7 @@ def test_explicit_null_resurrection_case(spark):
             }
         )
     )
-    for strategy in ("window", "cogroup", "merge"):
+    for strategy in ("window", "merge"):
         row = asof_join(left, right, strategy=strategy).collect()[0]
         assert row["snap_ts"] == pd.Timestamp("2024-01-01 09:00:00"), strategy
         assert row["f"] is None or (isinstance(row["f"], float) and np.isnan(row["f"])), strategy
@@ -102,7 +102,7 @@ def test_null_right_ts_never_matches(spark):
             }
         )
     )
-    for strategy in ("window", "cogroup", "merge"):
+    for strategy in ("window", "merge"):
         for tol in (None, 5 * 3600.0):
             row = asof_join(left, right, strategy=strategy, tolerance_s=tol).collect()[0]
             assert row["f"] == 2.0, (strategy, tol)
@@ -111,8 +111,9 @@ def test_null_right_ts_never_matches(spark):
 
 def test_null_left_ts_left_outer_not_crash(spark):
     """A left row with NULL ts is a data-quality case, not a job-killer: it
-    must come back with null right columns under every strategy (cogroup
-    previously aborted the whole join — merge_asof refuses null merge keys)."""
+    must come back with null right columns under every strategy (a
+    merge_asof-based kernel once aborted the whole join — merge_asof refuses
+    null merge keys)."""
     left = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -130,7 +131,7 @@ def test_null_left_ts_left_outer_not_crash(spark):
             }
         )
     )
-    for strategy in ("window", "cogroup", "merge"):
+    for strategy in ("window", "merge"):
         rows = {
             (r["ts"] is not None): r for r in asof_join(left, right, strategy=strategy).collect()
         }
@@ -157,7 +158,7 @@ def test_null_join_key_gets_no_features(spark):
             }
         )
     )
-    for strategy in ("window", "cogroup", "merge"):
+    for strategy in ("window", "merge"):
         row = asof_join(left, right, strategy=strategy).collect()[0]
         assert row["f"] is None or np.isnan(row["f"]), strategy
         assert row["snap_ts"] is None, strategy
@@ -176,7 +177,10 @@ def test_unorderable_right_columns_join_fine(spark):
         [("m", dt.datetime(2024, 1, 1, 8, 0, 0), 4.0, {"k": 1.0})],
         "conv_id string, snap_ts timestamp, f double, extras map<string,double>",
     )
-    for strategy in ("window", "cogroup", "merge"):
-        row = asof_join(left, right, strategy=strategy).collect()[0]
-        assert row["f"] == 4.0, strategy
-        assert row["extras"] == {"k": 1.0}, strategy
+    # window nearest sorts its prev/next structs by the orderable subset
+    for strategy, direction in (
+        ("window", "backward"), ("merge", "backward"), ("window", "nearest"),
+    ):
+        row = asof_join(left, right, strategy=strategy, direction=direction).collect()[0]
+        assert row["f"] == 4.0, (strategy, direction)
+        assert row["extras"] == {"k": 1.0}, (strategy, direction)

@@ -214,10 +214,10 @@ if HAVE_HYPOTHESIS:
         rights=st.lists(st.tuples(_key, _ts, st.floats(0, 100, allow_nan=False)), max_size=20),
         direction=st.sampled_from(["backward", "forward", "nearest"]),
     )
-    def test_asof_cogroup_directions_property(spark, lefts, rights, direction):
-        """All three cogroup directions equal pandas.merge_asof on arbitrary
-        small frames (duplicates-free right side, so only the search
-        semantics — not the tie rules — are in play)."""
+    def test_asof_directions_property(spark, lefts, rights, direction):
+        """Both strategies in all three directions equal pandas.merge_asof on
+        arbitrary small frames (duplicates-free right side, so only the
+        search semantics — not the tie rules — are in play)."""
         base = dt.datetime(2024, 1, 1)
         lpdf = pd.DataFrame(
             {
@@ -240,12 +240,6 @@ if HAVE_HYPOTHESIS:
             if len(rpdf)
             else spark.createDataFrame([], "conv_id string, snap_ts timestamp, val double")
         )
-        got = (
-            asof_join(ldf, rdf, strategy="cogroup", direction=direction)
-            .toPandas()
-            .sort_values(["conv_id", "ts"], kind="mergesort")
-            .reset_index(drop=True)
-        )
         want = pd.merge_asof(
             lpdf.sort_values("ts", kind="mergesort"),
             rpdf.sort_values("snap_ts", kind="mergesort"),
@@ -254,11 +248,21 @@ if HAVE_HYPOTHESIS:
             by="conv_id",
             direction=direction,
         ).sort_values(["conv_id", "ts"], kind="mergesort").reset_index(drop=True)
-        assert len(got) == len(want)
-        pd.testing.assert_series_equal(got["snap_ts"], want["snap_ts"], check_names=False)
-        pd.testing.assert_series_equal(
-            got["val"].astype(float), want["val"].astype(float), check_names=False
-        )
+        for strategy in ("window", "merge"):
+            got = (
+                asof_join(ldf, rdf, strategy=strategy, direction=direction)
+                .toPandas()
+                .sort_values(["conv_id", "ts"], kind="mergesort")
+                .reset_index(drop=True)
+            )
+            assert len(got) == len(want), strategy
+            pd.testing.assert_series_equal(
+                got["snap_ts"], want["snap_ts"], check_names=False, obj=strategy
+            )
+            pd.testing.assert_series_equal(
+                got["val"].astype(float), want["val"].astype(float),
+                check_names=False, obj=strategy,
+            )
 
 
 # --------------------------------------------------------------------------

@@ -34,7 +34,7 @@ def _oracle_pipeline(tp: pd.DataFrame, sp: pd.DataFrame):
     return out, survivors, vecs
 
 
-def _spark_pipeline(spark, transcripts, snapshots, strategy="cogroup"):
+def _spark_pipeline(spark, transcripts, snapshots, strategy="window"):
     cfg = PitfeatConfig(asof_strategy=strategy, session_gap_s=1800)
     p = (
         Pipeline.from_df(spark, transcripts, cfg)
@@ -51,7 +51,7 @@ def _spark_pipeline(spark, transcripts, snapshots, strategy="cogroup"):
 
 def test_golden_allclose_both_strategies(spark, transcripts, snapshots, transcripts_pd, snapshots_pd):
     oracle_df, survivors, oracle_vecs = _oracle_pipeline(transcripts_pd, snapshots_pd)
-    for strategy in ("cogroup", "merge"):
+    for strategy in ("window", "merge"):
         p = _spark_pipeline(spark, transcripts, snapshots, strategy)
         assert p.feature_cols == survivors, (strategy, p.feature_cols, survivors)
         got = p.df.select(*KEYS, "text", "features").toPandas().sort_values(KEYS).reset_index(drop=True)

@@ -104,7 +104,7 @@ def test_asof_microbatch_equals_batch(spark, transcripts, snapshots, stream_src)
 
 def test_stream_pit_features_equals_batch(spark, transcripts, snapshots, tmp_path):
     """SURVEY §2.10 custom state: running PIT features via
-    transformWithStateInPandas == batch as-of join on the same data."""
+    applyInPandasWithState == batch as-of join on the same data."""
     import numpy as np
     import pandas as pd
 
@@ -125,7 +125,7 @@ def test_stream_pit_features_equals_batch(spark, transcripts, snapshots, tmp_pat
     out = stream_pit_features(t_s, s_s, feats)
     q = (
         out.writeStream.format("memory")
-        .queryName("pit_tws")
+        .queryName("pit_state")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -133,7 +133,7 @@ def test_stream_pit_features_equals_batch(spark, transcripts, snapshots, tmp_pat
     q.awaitTermination(240)
     keys = ["conv_id", "turn_idx"]
     got = (
-        spark.sql("select * from pit_tws")
+        spark.sql("select * from pit_state")
         .toPandas()
         .sort_values(keys)
         .reset_index(drop=True)
@@ -182,7 +182,7 @@ def test_stream_pit_features_state_carries_across_batches(
     out = stream_pit_features(t_s, s_s, feats)
     q = (
         out.writeStream.format("memory")
-        .queryName("pit_tws_mb")
+        .queryName("pit_state_mb")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -191,7 +191,7 @@ def test_stream_pit_features_state_carries_across_batches(
     assert q.lastProgress is not None
     keys = ["conv_id", "turn_idx"]
     got = (
-        spark.sql("select * from pit_tws_mb")
+        spark.sql("select * from pit_state_mb")
         .toPandas()
         .sort_values(keys)
         .reset_index(drop=True)
