@@ -127,7 +127,6 @@ def _ew():
 
 
 def _asof_query(
-    strategy: str,
     allow_exact: bool = True,
     salt: int = 0,
     tolerance_s: float | None = None,
@@ -139,7 +138,7 @@ def _asof_query(
         snaps = _orders_snapshots(spark, sf_dir)
         j = asof_join(
             ev, snaps, on="user_id", left_ts="ts", right_ts="snap_ts",
-            allow_exact=allow_exact, strategy=strategy, salt_buckets=salt,
+            allow_exact=allow_exact, salt_buckets=salt,
             hot_threshold=hot_threshold, tolerance_s=tolerance_s,
             direction=direction,
         )
@@ -340,24 +339,29 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     # --- J: joins ---
-    q["j1_asof_backward"] = _asof_query("window")
-    q["j1_asof_merge"] = _asof_query("merge")
-    # in-cap as-of rows: both strategies in every direction (window backward/
-    # forward/nearest, merge backward/forward/nearest) plus blanket salting;
-    # strict, tolerance and targeted salting run in the tail entries below
-    q["j1_merge_forward"] = _asof_query("merge", direction="forward")
-    q["j2_asof_salted"] = _asof_query("window", salt=4)
-    q["j1_window_forward"] = _asof_query("window", direction="forward")
-    q["j1_window_nearest"] = _asof_query("window", direction="nearest")
-    # r7 rotation (VERDICT r6 #1): the four r6-NEW entries were registered
-    # straight to the tail and so had ZERO driver rows; they graduate to the
-    # cap here (merge-nearest, w12_ewma_time, d5_components, j4b below),
-    # displacing j5_anti_join, w5_cumulative, o4_except, f_date_funcs — all
-    # driver-green in consecutive rounds since their own in-cap debuts (j5a/
-    # o4e r5-r6, w5/f_date r1-r6) and all family-covered in-cap (j5_semi's
-    # sibling anti keeps pytest + tail checks, w5 ~ w3/w6's frame family,
-    # o4_except ~ o4_intersect tail, f_date ~ f_string in-cap).
-    q["j1_merge_nearest"] = _asof_query("merge", direction="nearest")
+    # in-cap as-of rows: the window fill in every direction, blanket
+    # salting, and targeted-salting forward; strict, tolerance and the
+    # other salting shapes run in the tail entries below. asof_join has one
+    # physical path, so j1_asof_merge and j1_merge_nearest (keys kept for
+    # their frozen oracles after the mapInPandas merge stream was retired)
+    # run the same plans as j1_asof_backward and j1_window_nearest — they
+    # are bench.py headline rows, timed there unsalted.
+    q["j1_asof_backward"] = _asof_query()
+    q["j1_asof_merge"] = _asof_query()
+    # targeted salting at threshold 70: users have 45-99 events (median ~66)
+    # at every sf, so some users take the salted path and the rest the
+    # plain one
+    q["j1_merge_forward"] = _asof_query(direction="forward", salt=4, hot_threshold=70)
+    q["j2_asof_salted"] = _asof_query(salt=4)
+    q["j1_window_forward"] = _asof_query(direction="forward")
+    q["j1_window_nearest"] = _asof_query(direction="nearest")
+    # w12_ewma_time, d5_components and j4b below graduated to the cap
+    # together with j1_merge_nearest, displacing j5_anti_join, w5_cumulative,
+    # o4_except and f_date_funcs — all driver-green in consecutive rounds
+    # and all family-covered in-cap (j5_semi's sibling anti keeps pytest +
+    # tail checks, w5 ~ w3/w6's frame family, o4_except ~ o4_intersect tail,
+    # f_date ~ f_string in-cap).
+    q["j1_merge_nearest"] = _asof_query(direction="nearest")
 
     def j3(spark, sf):
         orders = _t(spark, sf, "orders")
@@ -1079,8 +1083,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # query cap is likely. Entries below are ordered by decreasing
     # informativeness and every one has a DRIVER-green historical row plus a
     # sibling in-cap row or pytest covering the same operator family
-    # (j1_strict/tolerance/cogroup/nearest/forward ~ the in-cap window and
-    # merge rows of the same direction,
+    # (j1_strict/tolerance/cogroup/nearest/forward ~ the in-cap window rows
+    # of the same direction,
     # w7_role_ngram ~ w7_vocab_counts, a8_percentile ~ a8_rms_udaf, s3~s2,
     # d3 green r4 ~ d2, j5_semi green r1-r4 ~ j5_anti, o4_intersect green
     # r1-r4 ~ o4_except, w8 planted-dup identity, s6_knn_ivf ~ s6_knn_exact
@@ -1091,21 +1095,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (driver-green r4) and the family-swapped j5_semi/o4_intersect took the
     # tail slots. Every tail entry still runs under tools/check_contract.py
     # (the same DuckDB-oracle machinery) at sf0.001 and sf0.01 each round.
-    q["j1_asof_strict"] = _asof_query("window", allow_exact=False)
-    # tolerance through the merge strategy (its staleness path)
-    # r6: tolerance tightened 30d -> 1d with the remapped snapshots
-    # (per-user snapshot gaps are ~2-3 days, so SOME matches go stale
-    # and some survive — 30d nulled nothing after the remap, just as
-    # it nulled everything before it)
-    q["j1_asof_tolerance"] = _asof_query("merge", tolerance_s=86400.0)
-    # three keys kept for their frozen oracles after the cogroup strategy was
-    # retired, each now on a window path the in-cap rows do not cover:
-    # targeted salting (users have 45-99 events, median ~66, at every sf, so
-    # a threshold of 70 sends some users down the salted path and the rest
-    # down the plain one) and salted forward/nearest
-    q["j1_asof_cogroup"] = _asof_query("window", salt=4, hot_threshold=70)
-    q["j1_asof_nearest"] = _asof_query("window", direction="nearest", salt=4)
-    q["j1_asof_forward"] = _asof_query("window", direction="forward", salt=4)
+    q["j1_asof_strict"] = _asof_query(allow_exact=False)
+    # the window fill's staleness path; tolerance is 1d because per-user
+    # snapshot gaps are ~2-3 days, so SOME matches go stale and some survive
+    q["j1_asof_tolerance"] = _asof_query(tolerance_s=86400.0)
+    # keys kept for their frozen oracles after the as-of strategies they
+    # were named for were retired, each on a window path the in-cap rows do
+    # not cover: targeted-salting backward (threshold 70, as j1_merge_forward
+    # above) and blanket-salted nearest/forward
+    q["j1_asof_cogroup"] = _asof_query(salt=4, hot_threshold=70)
+    q["j1_asof_nearest"] = _asof_query(direction="nearest", salt=4)
+    q["j1_asof_forward"] = _asof_query(direction="forward", salt=4)
     # r7 rotation (VERDICT r6 #1): the four r6-new entries (j1_merge_nearest,
     # w12_ewma_time, d5_components, j4b_interval_pure) graduated to the cap;
     # the four displaced entries below are driver-green through r6 and keep

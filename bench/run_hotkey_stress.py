@@ -1,9 +1,7 @@
-"""Hot-key stress evidence (VERDICT r3 #7): the merge strategy's core 100-TB
-claim — memory bounded by the Arrow batch size plus ONE carried row,
-regardless of key heat (pitfeat/ops/asof.py module docstring) — exercised on
-a fixture where a SINGLE conversation holds 50% of ~100M turns.
+"""Hot-key stress evidence: the as-of join and the EWMA kernels on a fixture
+where a SINGLE conversation holds half of all turns.
 
-    python bench/run_hotkey_stress.py --turns 100000000
+    python bench/run_hotkey_stress.py --turns 10000000 --cpus 4
 
 Protocol:
 - deterministic expression-based fixture (no Python RNG): `hot` conv with
@@ -11,15 +9,24 @@ Protocol:
   conv. Timestamps are epoch + turn_idx*50ms (a 50M-turn conv spans ~29
   days — the cumulative-gap scheme gen_transcripts uses would overflow the
   timestamp range at this heat).
-- run asof_join(strategy=merge) and asof_join(strategy=window) over the
-  same input; force full evaluation with count + order-insensitive
-  bit_xor(xxhash64(struct(*))) checksum; assert checksums EQUAL.
-- after each run, read VmHWM (peak RSS) from /proc for the local JVM and
-  every pyspark.daemon worker: the merge kernel runs in the workers, so the
-  bounded-memory claim is about max worker VmHWM staying flat as --turns
-  grows (run with --turns 10000000 then 100000000 to see the flatness).
+- `--op asof` (default) runs asof_join twice over the same input: the plain
+  window fill (`window`), then the same fill with targeted salting
+  (`targeted`: keys with at least --hot-threshold turns split into
+  --salt-buckets sorted streams, so the hot conv's sort no longer lands in
+  one task). Each run is forced with count + order-insensitive
+  bit_xor(xxhash64(struct(*))) checksum, and the script exits non-zero
+  unless both checksums and row counts are equal. `--legs` runs one of
+  them alone (no cross-check), so each gets its own peak RSS.
+- `--op ewma` / `--op ewma_time` run the W11 / W12 sorted-stream kernels,
+  whose worker memory is one Arrow batch plus the carried state of one key.
+- `--reps N` forces each leg N times (the first rep is cold: JIT and
+  codegen warm-up), reporting wall and CPU seconds per rep.
+- after each run, record the engine JVM's CPU seconds for the run and read
+  VmHWM (peak RSS since process start, so a second leg reports the max of
+  both) from /proc for the local JVM and every pyspark.daemon worker.
 
-Prints one JSON line with wall seconds, checksums, rows and peak-RSS MB.
+Prints one JSON line with wall seconds, CPU seconds, checksums, rows and
+peak-RSS MB.
 """
 
 from __future__ import annotations
@@ -132,16 +139,31 @@ def peak_rss_mb() -> dict:
     return peaks
 
 
+def jvm_cpu_s(spark: SparkSession) -> float:
+    """User + system CPU seconds of the local engine JVM so far."""
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--turns", type=int, default=100_000_000)
     ap.add_argument("--hot-frac", type=float, default=0.5)
     ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--skip-window", action="store_true",
-                    help="merge strategy only (skip the window-checksum cross-check)")
+    ap.add_argument("--salt-buckets", type=int, default=4,
+                    help="as-of targeted leg: sorted streams per hot key")
+    ap.add_argument("--hot-threshold", type=int, default=100_000,
+                    help="as-of targeted leg: turns per conv at which it is salted")
+    ap.add_argument("--reps", type=int, default=1,
+                    help="force each leg this many times; the first is cold")
+    ap.add_argument("--legs", nargs="+", choices=["window", "targeted"],
+                    default=["window", "targeted"],
+                    help="as-of legs to run; the checksum cross-check needs both")
     ap.add_argument("--op", choices=["asof", "ewma", "ewma_time"], default="asof",
-                    help="kernel to stress: the as-of join strategies, the "
-                    "W11 EWMA recurrence (same sorted-stream shape, state = "
+                    help="kernel to stress: the as-of join (plain and targeted "
+                    "window), the W11 EWMA recurrence (sorted stream, state = "
                     "one scalar per boundary key), or the W12 event-time "
                     "EWMA (r6) — whose hot-key continuation rows pay the "
                     "exact scalar kernel, the documented CPU caveat this "
@@ -184,36 +206,42 @@ def main():
         else:
             op_df = ewma(with_x, "x", alpha=0.05, key="conv_id", ts="ts",
                          order_extra=("turn_idx",))
-        t0 = time.perf_counter()
-        n, chk = force(op_df)
-        result[args.op] = {
-            "sec": round(time.perf_counter() - t0, 1),
+        legs = {args.op: op_df}
+    else:
+        salting = {
+            "window": {},
+            "targeted": {"salt_buckets": args.salt_buckets,
+                         "hot_threshold": args.hot_threshold},
+        }
+        legs = {
+            leg: asof_join(turns, snaps, on="conv_id", left_ts="ts",
+                           right_ts="snap_ts", **salting[leg])
+            for leg in args.legs
+        }
+    for leg, df in legs.items():
+        secs, cpus = [], []
+        for _ in range(args.reps):
+            t0, c0 = time.perf_counter(), jvm_cpu_s(spark)
+            n, chk = force(df)
+            secs.append(round(time.perf_counter() - t0, 1))
+            cpus.append(round(jvm_cpu_s(spark) - c0, 1))
+        result[leg] = {
+            "sec": secs if args.reps > 1 else secs[0],
+            "cpu_s": cpus if args.reps > 1 else cpus[0],
             "rows": n,
             "checksum": chk,
             "peak_rss": peak_rss_mb(),
         }
-    else:
-        for strat in (["merge"] if args.skip_window else ["merge", "window"]):
-            t0 = time.perf_counter()
-            n, chk = force(
-                asof_join(
-                    turns, snaps, on="conv_id", left_ts="ts",
-                    right_ts="snap_ts", strategy=strat,
-                )
-            )
-            result[strat] = {
-                "sec": round(time.perf_counter() - t0, 1),
-                "rows": n,
-                "checksum": chk,
-                "peak_rss": peak_rss_mb(),
-            }
-        if not args.skip_window:
-            result["checksums_equal"] = (
-                result["merge"]["checksum"] == result["window"]["checksum"]
-                and result["merge"]["rows"] == result["window"]["rows"]
-            )
+    both = args.op == "asof" and set(args.legs) == {"window", "targeted"}
+    if both:
+        result["checksums_equal"] = (
+            result["window"]["checksum"] == result["targeted"]["checksum"]
+            and result["window"]["rows"] == result["targeted"]["rows"]
+        )
     print(json.dumps(result))
     spark.stop()
+    if both and not result["checksums_equal"]:
+        sys.exit("as-of checksums differ between the window and targeted legs")
 
 
 if __name__ == "__main__":

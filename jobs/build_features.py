@@ -2,7 +2,7 @@
 
     spark-submit --master local[8] --py-files dist/pitfeat.zip \
         jobs/build_features.py --transcripts T.parquet --snapshots S.parquet \
-        --out OUT_DIR [--resume RUN_ID] [--strategy window|merge] [--count-only]
+        --out OUT_DIR [--resume RUN_ID] [--salt-buckets B] [--count-only]
 
 Reads transcripts + feature snapshots, runs as-of join -> windowed features ->
 min-max normalize (degenerate pruning) -> vector assembly, writes the feature
@@ -73,7 +73,6 @@ def main(argv=None):
     ap.add_argument("--out", default=None)
     ap.add_argument("--resume", default=None, help="run id for checkpoint resume")
     ap.add_argument("--ckpt-root", default="/tmp/pitfeat_ckpt")
-    ap.add_argument("--strategy", default="window", choices=["window", "merge"])
     ap.add_argument("--salt-buckets", type=int, default=0,
                     help="hot-key salting fanout for the as-of join (0 = off); "
                          "engages TARGETED salting for keys above --hot-threshold")
@@ -92,7 +91,6 @@ def main(argv=None):
     args = ap.parse_args(argv)
 
     cfg = PitfeatConfig(
-        asof_strategy=args.strategy,
         salt_buckets=args.salt_buckets,
         hot_key_threshold=args.hot_threshold,
     )
@@ -181,7 +179,6 @@ def main(argv=None):
                 "checksum": chk,
                 "resumed": resumed,
                 "resumed_stages": resumed_stages,
-                "strategy": args.strategy,
                 "master": spark.sparkContext.master,
             }
         )

@@ -14,7 +14,6 @@ from dataclasses import asdict, dataclass, field
 @dataclass(frozen=True)
 class PitfeatConfig:
     # --- as-of join (J1/J2) ---
-    asof_strategy: str = "window"  # "window" (pure-JVM union-tag ffill, DEFAULT) | "merge" (streaming mapInPandas merge)
     asof_allow_exact: bool = True  # snap_ts <= ts when True, strict < when False
     asof_tolerance_s: float | None = None  # max staleness in seconds; None = unbounded
     salt_buckets: int = 0  # 0 = no salting; >0 = replicate right side x B (J2)
@@ -39,9 +38,9 @@ class PitfeatConfig:
     # size is a pure throughput knob. 4096-row batches made every
     # mapInPandas/pandas_udf stream pay its per-batch pandas overhead 8x
     # more often than needed; kernels are pinned batch-size-invariant
-    # (tests/test_ewma.py boundary tests, asof merge carry, per-row text
-    # kernels), so raising this cannot change results. 32768 x ~100B rows
-    # keeps per-batch buffers in the tens of MB — safe at 100TB scale too.
+    # (tests/test_ewma.py boundary tests, per-row text kernels), so raising
+    # this cannot change results. 32768 x ~100B rows keeps per-batch buffers
+    # in the tens of MB — safe at 100TB scale too.
     arrow_batch_rows: int = 32768
 
     # --- partitioning (K1/K4) ---

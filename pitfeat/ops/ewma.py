@@ -9,16 +9,16 @@ small-scale SQL oracle — is numerically unusable as an engine plan:
 ``(1-alpha)^-j`` overflows float64 after ~1000 steps at any realistic alpha,
 so a cumsum reformulation cannot survive a long conversation.
 
-Spark mapping — the same sorted-stream shape as the merge as-of strategy
-(pitfeat/ops/asof.py): ``repartition(key)`` (hash) makes each key's rows
-land in one partition, ``sortWithinPartitions(key, ts, *order_extra)`` makes
-the partition stream key-contiguous and time-ordered, and ONE ``mapInPandas``
-pass runs the recurrence per key run (pandas ``ewm(adjust=False)``,
-C-vectorized) carrying each partition-boundary key's last state across Arrow
-batches. State is evicted down to the single key that can span a batch
-boundary, so worker memory is O(Arrow batch + 1 carried scalar) — independent
-of key cardinality and key heat, the same bounded-memory story proven for the
-merge kernel at 100M turns (BASELINE.md hot-key stress).
+Spark mapping — one sorted stream: ``repartition(key)`` (hash) makes each
+key's rows land in one partition, ``sortWithinPartitions(key, ts,
+*order_extra)`` makes the partition stream key-contiguous and time-ordered,
+and ONE ``mapInPandas`` pass runs the recurrence per key run (pandas
+``ewm(adjust=False)``, C-vectorized) carrying the batch-boundary key's last
+state across Arrow batches. Only the final key of a batch can continue into
+the next one, so the carried state is one scalar and worker memory is
+O(Arrow batch + 1 scalar), whatever the key cardinality or heat; the sort
+before it is Spark's, spill-backed. ``bench/run_hotkey_stress.py --op ewma``
+runs it on a one-hot-conversation fixture.
 
 Null semantics: a null/NaN input yields a null output and leaves the state
 untouched (the next valid row continues from the last valid EWMA). This is

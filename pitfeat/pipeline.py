@@ -87,7 +87,6 @@ class Pipeline:
             right_ts="snap_ts",
             allow_exact=self.cfg.asof_allow_exact,
             tolerance_s=self.cfg.asof_tolerance_s,
-            strategy=self.cfg.asof_strategy,
             salt_buckets=self.cfg.salt_buckets,
             # keys above this engage TARGETED salting; below it the plain
             # window path wins (measured — see BASELINE.md skew paragraph)

@@ -236,7 +236,7 @@ def stream_pit_features(
 
 def asof_features_microbatch(snapshots: DataFrame):
     """Returns a foreachBatch-compatible transformation: each micro-batch of
-    transcript turns is as-of joined (window strategy, zero leakage) against
+    transcript turns is as-of joined (window fill, zero leakage) against
     the snapshot table. Production shape for 'enrich a turn stream with the
     latest preceding features' when snapshots live in a slowly-changing table.
 

@@ -83,6 +83,18 @@ def asof_dedup_oracle(
     return out.set_index("index").sort_index()[list(left.columns) + vals]
 
 
+def salting_shapes(hot_threshold: int) -> dict[str, dict]:
+    """``asof_join`` keyword sets for its three physical plans, so every
+    as-of comparison against the references above runs more than one plan:
+    the plain window fill, blanket x4 salting, and targeted salting (keys
+    with at least ``hot_threshold`` left rows salted x4, the rest plain)."""
+    return {
+        "window": {},
+        "salted": {"salt_buckets": 4},
+        "targeted": {"salt_buckets": 4, "hot_threshold": hot_threshold},
+    }
+
+
 def gap_oracle(t: pd.DataFrame) -> pd.Series:
     t = t.sort_values(["conv_id", "turn_idx"])
     return t.groupby("conv_id")["ts"].transform(

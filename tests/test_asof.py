@@ -6,10 +6,15 @@ import pytest
 
 from pitfeat.ops.asof import asof_join
 from pitfeat.schema import snapshot_feature_cols
-from tests.oracle_pandas import asof_dedup_oracle, asof_oracle
+from tests.oracle_pandas import asof_dedup_oracle, asof_oracle, salting_shapes
 
 FEATS = snapshot_feature_cols()
 KEYS = ["conv_id", "turn_idx"]
+# the 50-conv fixture averages 20 turns per conv, so threshold 20 salts
+# some convs and leaves the rest on the plain path
+SHAPES = salting_shapes(20)
+# inline frames with a row or two per key: every key takes the salted path
+INLINE = salting_shapes(1)
 
 
 def _sorted(pdf):
@@ -34,22 +39,22 @@ def _assert_matches_oracle(spark_out: pd.DataFrame, oracle: pd.DataFrame):
         )
 
 
-@pytest.mark.parametrize("strategy", ["window", "merge"])
+@pytest.mark.parametrize("shape", list(SHAPES))
 @pytest.mark.parametrize("allow_exact", [True, False])
 def test_asof_matches_merge_asof(
-    transcripts, snapshots, transcripts_pd, snapshots_pd, strategy, allow_exact
+    transcripts, snapshots, transcripts_pd, snapshots_pd, shape, allow_exact
 ):
     out = _collect_sorted(
-        asof_join(transcripts, snapshots, allow_exact=allow_exact, strategy=strategy)
+        asof_join(transcripts, snapshots, allow_exact=allow_exact, **SHAPES[shape])
     )
     oracle = asof_oracle(transcripts_pd, snapshots_pd, allow_exact=allow_exact)
     _assert_matches_oracle(out, oracle)
 
 
-@pytest.mark.parametrize("strategy", ["window", "merge"])
-def test_asof_tolerance(transcripts, snapshots, transcripts_pd, snapshots_pd, strategy):
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_asof_tolerance(transcripts, snapshots, transcripts_pd, snapshots_pd, shape):
     out = _collect_sorted(
-        asof_join(transcripts, snapshots, tolerance_s=120.0, strategy=strategy)
+        asof_join(transcripts, snapshots, tolerance_s=120.0, **SHAPES[shape])
     )
     oracle = asof_oracle(transcripts_pd, snapshots_pd, tolerance_s=120.0)
     _assert_matches_oracle(out, oracle)
@@ -61,11 +66,11 @@ def test_asof_salted_equals_unsalted(transcripts, snapshots):
     pd.testing.assert_frame_equal(base, salted)
 
 
-@pytest.mark.parametrize("strategy", ["window", "merge"])
-def test_zero_temporal_leakage(transcripts, snapshots, strategy):
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_zero_temporal_leakage(transcripts, snapshots, shape):
     """No output row may carry a snapshot from its future; and deleting the
     future must not change any feature (SURVEY.md §5 item 2)."""
-    out = asof_join(transcripts, snapshots, strategy=strategy).toPandas()
+    out = asof_join(transcripts, snapshots, **SHAPES[shape]).toPandas()
     matched = out[out["snap_ts"].notna()]
     assert (matched["snap_ts"] <= matched["ts"]).all()
 
@@ -75,7 +80,7 @@ def test_zero_temporal_leakage(transcripts, snapshots, strategy):
 
     cut = out["ts"].quantile(0.5)
     trunc = snapshots.filter(F.col("snap_ts") <= F.lit(cut.to_pydatetime()))
-    out2 = asof_join(transcripts, trunc, strategy=strategy).toPandas()
+    out2 = asof_join(transcripts, trunc, **SHAPES[shape]).toPandas()
     a = out[out["ts"] <= cut].sort_values(KEYS).reset_index(drop=True)
     b = out2[out2["ts"] <= cut].sort_values(KEYS).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
@@ -96,31 +101,24 @@ def test_left_rows_preserved(transcripts, snapshots):
 
 
 def test_no_row_python_in_plan(transcripts, snapshots):
-    """Plan-shape invariant (SURVEY.md §4): vectorized nodes only, and no
-    grouped pandas kernel in any strategy."""
-    for strategy, node in [
-        ("merge", "MapInPandas"),
-        ("window", "Window"),
-    ]:
-        plan = asof_join(transcripts, snapshots, strategy=strategy)._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan
-        assert "FlatMapCoGroupsInPandas" not in plan
-        assert node in plan
-    # the r5 window directions stay pure JVM: no Python node of any kind
-    for direction in ("forward", "nearest"):
-        plan = (
-            asof_join(transcripts, snapshots, strategy="window", direction=direction)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        for pynode in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                       "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"):
-            assert pynode not in plan
-        assert "Window" in plan
+    """Plan-shape invariant (SURVEY.md §4): every direction under every
+    salting shape is a pure-JVM window plan, with no Python node of any
+    kind."""
+    for direction in ("backward", "forward", "nearest"):
+        for shape, kw in SHAPES.items():
+            plan = (
+                asof_join(transcripts, snapshots, direction=direction, **kw)
+                ._jdf.queryExecution().executedPlan().toString()
+            )
+            for pynode in ("Python", "InPandas", "InArrow"):
+                assert pynode not in plan, (direction, shape, pynode)
+            assert "Window" in plan, (direction, shape)
 
 
 def test_duplicate_right_rows_deterministic(spark):
-    """Duplicate right rows sharing (key, right_ts): every strategy must pick
-    the same winner — the greatest value tuple — not shuffle-order luck."""
+    """Duplicate right rows sharing (key, right_ts): every salting shape must
+    pick the same winner — the greatest value tuple — not shuffle-order
+    luck."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -131,11 +129,8 @@ def test_duplicate_right_rows_deterministic(spark):
         [("c1", t0, 10.0), ("c1", t0, 30.0), ("c1", t0, 20.0)],
         "conv_id string, snap_ts timestamp, val double",
     )
-    winners = {
-        s: asof_join(left, right, strategy=s).collect()[0]["val"]
-        for s in ("window", "merge")
-    }
-    assert winners == {"window": 30.0, "merge": 30.0}
+    for shape, kw in INLINE.items():
+        assert asof_join(left, right, **kw).collect()[0]["val"] == 30.0, shape
 
 
 def test_targeted_salting_equals_unsalted(transcripts, snapshots):
@@ -156,8 +151,8 @@ def test_targeted_salting_equals_unsalted(transcripts, snapshots):
 
 def test_duplicate_right_rows_deterministic_forward(spark):
     """Forward direction must ALSO resolve equal-(key, ts) right duplicates
-    to the greatest value tuple in both strategies (ADVICE r2 — a forward
-    kernel once returned the smallest tuple, 10.0)."""
+    to the greatest value tuple under every salting shape (ADVICE r2 — a
+    forward kernel once returned the smallest tuple, 10.0)."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1, 14, 0, 0)
@@ -168,16 +163,16 @@ def test_duplicate_right_rows_deterministic_forward(spark):
         [("c1", t0, 10.0), ("c1", t0, 30.0), ("c1", t0, 20.0)],
         "conv_id string, snap_ts timestamp, val double",
     )
-    for strategy in ("window", "merge"):
-        out = asof_join(left, right, strategy=strategy, direction="forward").collect()
-        assert out[0]["val"] == 30.0, strategy
+    for shape, kw in INLINE.items():
+        out = asof_join(left, right, direction="forward", **kw).collect()
+        assert out[0]["val"] == 30.0, shape
 
 
 def test_nearest_duplicates_and_equidistant_deterministic(spark):
     """nearest must (a) resolve duplicate right rows at one (key, ts) to the
     GREATEST value tuple whichever side of the left ts they fall on, and
     (b) prefer the PRECEDING row when two distinct timestamps are
-    equidistant (the pandas rule) — in both strategies."""
+    equidistant (the pandas rule) — under every salting shape."""
     import datetime as dt
 
     t13 = dt.datetime(2024, 1, 1, 13, 0, 0)
@@ -196,67 +191,28 @@ def test_nearest_duplicates_and_equidistant_deterministic(spark):
         ],
         "conv_id string, snap_ts timestamp, val double",
     )
-    for strategy in ("window", "merge"):
+    for shape, kw in INLINE.items():
         out = {
             r["conv_id"]: r["val"]
-            for r in asof_join(left, right, strategy=strategy, direction="nearest").collect()
+            for r in asof_join(left, right, direction="nearest", **kw).collect()
         }
-        assert out == {"c1": 30.0, "c2": 5.0, "c3": 30.0}, strategy
+        assert out == {"c1": 30.0, "c2": 5.0, "c3": 30.0}, shape
 
 
-def test_asof_default_strategy_documented_and_pinned():
-    """VERDICT r3 #6: the module docstring claimed cogroup was the default
-    while the signature default was window. Pin both the actual default and
-    the docstring's strategy x direction support matrix so they cannot drift
-    apart again."""
-    import inspect
-
-    from pitfeat.ops import asof as A
-
-    assert inspect.signature(A.asof_join).parameters["strategy"].default == "window"
-    assert "``window`` (DEFAULT" in A.__doc__
-    for line in ("window     yes       yes      yes",
-                 "merge      yes       yes      yes"):  # r6: matrix complete
-        assert line in A.__doc__
+# ---- forward direction ----
 
 
-def test_retired_cogroup_strategy_raises_before_any_job(spark, transcripts, snapshots):
-    """``cogroup`` is no longer a strategy: asof_join and a Pipeline whose
-    config names it raise ValueError at plan-build time, and no Spark job
-    starts in their job group."""
-    from pitfeat.config import PitfeatConfig
-    from pitfeat.pipeline import Pipeline
-
-    sc = spark.sparkContext
-    group = "asof-retired-cogroup"
-    sc.setJobGroup(group, group)
-    try:
-        with pytest.raises(ValueError, match="unknown strategy 'cogroup'"):
-            asof_join(transcripts, snapshots, strategy="cogroup")
-        pipe = Pipeline.from_df(spark, transcripts, PitfeatConfig(asof_strategy="cogroup"))
-        with pytest.raises(ValueError, match="unknown strategy 'cogroup'"):
-            pipe.asof_snapshots(snapshots)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-
-
-# ---- forward direction for merge (VERDICT r4 #4) + window (r5) ----
-
-
-@pytest.mark.parametrize("strategy", ["merge", "window"])
+@pytest.mark.parametrize("shape", list(SHAPES))
 @pytest.mark.parametrize("allow_exact", [True, False])
 def test_forward_strategies_match_oracle(
-    transcripts, snapshots, transcripts_pd, snapshots_pd, strategy, allow_exact
+    transcripts, snapshots, transcripts_pd, snapshots_pd, shape, allow_exact
 ):
-    """The descending-stream merge kernel AND the descending-window fill
-    against pandas merge_asof (direction='forward') — skew-robust forward
-    paths (merge: bounded-memory kernel; window: spill-backed sort)."""
+    """The descending-window fill against pandas merge_asof
+    (direction='forward') under every salting shape."""
     out = _collect_sorted(
         asof_join(
             transcripts, snapshots, allow_exact=allow_exact,
-            strategy=strategy, direction="forward",
+            direction="forward", **SHAPES[shape],
         )
     )
     oracle = asof_oracle(
@@ -265,16 +221,16 @@ def test_forward_strategies_match_oracle(
     _assert_matches_oracle(out, oracle)
 
 
-@pytest.mark.parametrize("strategy", ["merge", "window"])
+@pytest.mark.parametrize("shape", list(SHAPES))
 def test_forward_tolerance(
-    transcripts, snapshots, transcripts_pd, snapshots_pd, strategy
+    transcripts, snapshots, transcripts_pd, snapshots_pd, shape
 ):
     """Forward staleness flips sign: a match further than tol in the FUTURE
     is nulled."""
     out = _collect_sorted(
         asof_join(
             transcripts, snapshots, tolerance_s=120.0,
-            strategy=strategy, direction="forward",
+            direction="forward", **SHAPES[shape],
         )
     )
     oracle = asof_oracle(
@@ -284,12 +240,13 @@ def test_forward_tolerance(
 
 
 def test_merge_forward_equals_cogroup_randomized(spark):
-    """merge/forward AND window/forward == the pandas reference
-    (``asof_dedup_oracle``: the logic of the retired cogroup kernel this test
-    is named for, without its buckets) on randomized frames with planted
+    """Forward under every salting shape == the pandas reference
+    (``asof_dedup_oracle``; the name recalls the retired merge and cogroup
+    kernels this test first compared) on randomized frames with planted
     equal-ts ties, duplicate right rows (greatest-tuple rule), null left
     timestamps (must stay unmatched — the desc_nulls_first edge) and keys
-    with no right side at all."""
+    with no right side at all. Keys average ~33 left rows, so threshold 33
+    salts about half of them."""
     rs = np.random.RandomState(19)
     n_keys, rows = 12, 400
     lrows = []
@@ -317,10 +274,10 @@ def test_merge_forward_equals_cogroup_randomized(spark):
     for allow_exact in (True, False):
         c = _sorted(asof_dedup_oracle(lpdf, rpdf, allow_exact=allow_exact,
                                       direction="forward"))
-        for strategy in ("merge", "window"):
+        for kw in salting_shapes(33).values():
             m = _collect_sorted(
                 asof_join(left, right, allow_exact=allow_exact,
-                          strategy=strategy, direction="forward")
+                          direction="forward", **kw)
             )
             pd.testing.assert_frame_equal(m, c)
             # null-ts left rows present and unmatched
@@ -328,7 +285,7 @@ def test_merge_forward_equals_cogroup_randomized(spark):
             assert len(nulls) > 0 and nulls["snap_ts"].isna().all()
 
 
-# ---------- window-strategy nearest direction (r5) ----------
+# ---------- nearest direction ----------
 
 
 def test_window_nearest_matches_pandas(
@@ -337,21 +294,21 @@ def test_window_nearest_matches_pandas(
     """The one-pass prev+next window fill against the pandas nearest
     oracle — nearest finally has a skew-safe (spill-backed sort) path."""
     out = _collect_sorted(
-        asof_join(transcripts, snapshots, strategy="window", direction="nearest")
+        asof_join(transcripts, snapshots, direction="nearest")
     )
     oracle = asof_oracle(transcripts_pd, snapshots_pd, direction="nearest")
     _assert_matches_oracle(out, oracle)
 
 
 def test_window_nearest_equals_cogroup_randomized(spark):
-    """window/nearest AND merge/nearest (r6 — the last strategy x direction
-    matrix hole) == the pandas reference (``asof_dedup_oracle``: the logic of
-    the retired cogroup kernel this test is named for, without its buckets)
-    on randomized frames: equal-ts duplicate right rows (greatest-tuple
-    rule), equidistant pairs
-    (prefer preceding), strict exactness, tolerance, null left timestamps
-    (must stay unmatched — the next-frame would otherwise hand them the
-    first snapshot in sort order), and right-less keys."""
+    """Window nearest under every salting shape == the pandas reference
+    (``asof_dedup_oracle``: the logic of the retired cogroup kernel this test
+    is named for, without its buckets) on randomized frames: equal-ts
+    duplicate right rows (greatest-tuple rule), equidistant pairs (prefer
+    preceding), strict exactness, tolerance, null left timestamps (must stay
+    unmatched — the next-frame would otherwise hand them the first snapshot
+    in sort order), and right-less keys. Keys average 30 left rows, so
+    threshold 30 salts about half of them."""
     rs = np.random.RandomState(29)
     n_keys = 10
     lrows = []
@@ -380,31 +337,12 @@ def test_window_nearest_equals_cogroup_randomized(spark):
         for tol in (None, 90.0):
             c = _sorted(asof_dedup_oracle(lpdf, rpdf, allow_exact=allow_exact,
                                           tolerance_s=tol, direction="nearest"))
-            for strategy in ("window", "merge"):
+            for kw in salting_shapes(30).values():
                 w = _collect_sorted(
                     asof_join(left, right, allow_exact=allow_exact, tolerance_s=tol,
-                              strategy=strategy, direction="nearest")
+                              direction="nearest", **kw)
                 )
                 pd.testing.assert_frame_equal(w, c)
                 nulls = w[w["ts"].isna()]
                 assert len(nulls) > 0 and nulls["snap_ts"].isna().all()
-    # salting composes (doubled right rows replicate xB)
-    base = _collect_sorted(
-        asof_join(left, right, strategy="window", direction="nearest")
-    )
-    salted = _collect_sorted(
-        asof_join(left, right, strategy="window", direction="nearest", salt_buckets=4)
-    )
-    pd.testing.assert_frame_equal(base, salted)
 
-
-def test_merge_nearest_matches_pandas(
-    transcripts, snapshots, transcripts_pd, snapshots_pd
-):
-    """merge/nearest (two chained bounded-memory merge passes, r6) against
-    the pandas merge_asof nearest oracle on the standard fixture."""
-    out = _collect_sorted(
-        asof_join(transcripts, snapshots, strategy="merge", direction="nearest")
-    )
-    oracle = asof_oracle(transcripts_pd, snapshots_pd, direction="nearest")
-    _assert_matches_oracle(out, oracle)

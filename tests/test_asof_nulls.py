@@ -8,7 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from pitfeat.ops.asof import asof_join
-from tests.oracle_pandas import asof_oracle
+from tests.oracle_pandas import asof_oracle, salting_shapes
+
+SHAPES = salting_shapes(20)  # the 50-conv fixture averages 20 turns per conv
+# inline frames below hold one or two left rows per key: threshold 2 salts
+# the two-row keys and leaves the one-row keys on the plain path
+INLINE = salting_shapes(2)
 
 
 @pytest.fixture(scope="module")
@@ -33,10 +38,10 @@ def mixed_null_snapshots(spark, transcripts):
     return out.cache()
 
 
-@pytest.mark.parametrize("strategy", ["window", "merge"])
-def test_row_atomic_fill(transcripts, transcripts_pd, mixed_null_snapshots, strategy):
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_row_atomic_fill(transcripts, transcripts_pd, mixed_null_snapshots, shape):
     out = (
-        asof_join(transcripts, mixed_null_snapshots, strategy=strategy)
+        asof_join(transcripts, mixed_null_snapshots, **SHAPES[shape])
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
@@ -50,7 +55,7 @@ def test_row_atomic_fill(transcripts, transcripts_pd, mixed_null_snapshots, stra
     for i in range(16):
         c = f"f_{i}"
         np.testing.assert_allclose(
-            out[c].to_numpy(float), oracle[c].to_numpy(float), equal_nan=True, err_msg=(strategy, c)
+            out[c].to_numpy(float), oracle[c].to_numpy(float), equal_nan=True, err_msg=(shape, c)
         )
 
 
@@ -78,18 +83,18 @@ def test_explicit_null_resurrection_case(spark):
             }
         )
     )
-    for strategy in ("window", "merge"):
-        row = asof_join(left, right, strategy=strategy).collect()[0]
-        assert row["snap_ts"] == pd.Timestamp("2024-01-01 09:00:00"), strategy
-        assert row["f"] is None or (isinstance(row["f"], float) and np.isnan(row["f"])), strategy
+    for shape, kw in INLINE.items():
+        row = asof_join(left, right, **kw).collect()[0]
+        assert row["snap_ts"] == pd.Timestamp("2024-01-01 09:00:00"), shape
+        assert row["f"] is None or (isinstance(row["f"], float) and np.isnan(row["f"])), shape
 
 
 def test_null_right_ts_never_matches(spark):
     """A right row with NULL snap_ts has unknowable age and must NEVER be
-    forward-filled into a match (it previously was, under window and merge —
-    including through the tolerance stale-check, which nulls out of a NULL
-    timestamp comparison). Every strategy must agree: only the real s(2024-01-01
-    08:00) snapshot matches."""
+    forward-filled into a match (it once was — including through the
+    tolerance stale-check, which nulls out of a NULL timestamp comparison).
+    Every salting shape must agree: only the real s(2024-01-01 08:00)
+    snapshot matches."""
     left = spark.createDataFrame(
         pd.DataFrame({"conv_id": ["b"], "ts": [pd.Timestamp("2024-01-01 09:00:00")]})
     )
@@ -102,16 +107,16 @@ def test_null_right_ts_never_matches(spark):
             }
         )
     )
-    for strategy in ("window", "merge"):
+    for shape, kw in INLINE.items():
         for tol in (None, 5 * 3600.0):
-            row = asof_join(left, right, strategy=strategy, tolerance_s=tol).collect()[0]
-            assert row["f"] == 2.0, (strategy, tol)
-            assert row["snap_ts"] == pd.Timestamp("2024-01-01 08:00:00"), (strategy, tol)
+            row = asof_join(left, right, tolerance_s=tol, **kw).collect()[0]
+            assert row["f"] == 2.0, (shape, tol)
+            assert row["snap_ts"] == pd.Timestamp("2024-01-01 08:00:00"), (shape, tol)
 
 
 def test_null_left_ts_left_outer_not_crash(spark):
     """A left row with NULL ts is a data-quality case, not a job-killer: it
-    must come back with null right columns under every strategy (a
+    must come back with null right columns under every salting shape (a
     merge_asof-based kernel once aborted the whole join — merge_asof refuses
     null merge keys)."""
     left = spark.createDataFrame(
@@ -131,21 +136,21 @@ def test_null_left_ts_left_outer_not_crash(spark):
             }
         )
     )
-    for strategy in ("window", "merge"):
+    for shape, kw in INLINE.items():
         rows = {
-            (r["ts"] is not None): r for r in asof_join(left, right, strategy=strategy).collect()
+            (r["ts"] is not None): r for r in asof_join(left, right, **kw).collect()
         }
-        assert len(rows) == 2, strategy
-        assert rows[True]["f"] == 3.0, strategy
+        assert len(rows) == 2, shape
+        assert rows[True]["f"] == 3.0, shape
         good = rows[False]
-        assert good["f"] is None or np.isnan(good["f"]), strategy
-        assert good["snap_ts"] is None, strategy
+        assert good["f"] is None or np.isnan(good["f"]), shape
+        assert good["snap_ts"] is None, shape
 
 
 def test_null_join_key_gets_no_features(spark):
-    """NULL keys must follow SQL join semantics in every strategy: a null-key
-    left row never receives a null-key right row's snapshot (the window
-    strategy previously grouped nulls together and enriched them)."""
+    """NULL keys must follow SQL join semantics under every salting shape: a
+    null-key left row never receives a null-key right row's snapshot (the
+    window fill once grouped nulls together and enriched them)."""
     left = spark.createDataFrame(
         pd.DataFrame({"conv_id": [None], "ts": [pd.Timestamp("2024-01-01 10:00:00")]})
     )
@@ -158,29 +163,39 @@ def test_null_join_key_gets_no_features(spark):
             }
         )
     )
-    for strategy in ("window", "merge"):
-        row = asof_join(left, right, strategy=strategy).collect()[0]
-        assert row["f"] is None or np.isnan(row["f"]), strategy
-        assert row["snap_ts"] is None, strategy
+    for shape, kw in INLINE.items():
+        row = asof_join(left, right, **kw).collect()[0]
+        assert row["f"] is None or np.isnan(row["f"]), shape
+        assert row["snap_ts"] is None, shape
 
 
 def test_unorderable_right_columns_join_fine(spark):
     """A right side carrying a map<string,double> column must not break the
-    join: maps are excluded from the duplicate-tie-break SORT KEYS (Spark and
-    pandas both refuse to order them) but still flow through as values."""
-    left = spark.createDataFrame(
-        pd.DataFrame({"conv_id": ["m"], "ts": [pd.Timestamp("2024-01-01 10:00:00")]})
-    )
+    join: maps are excluded from the duplicate-tie-break SORT KEYS (Spark
+    refuses to order them) but still flow through as values — also into
+    unmatched rows, which get a null map (a pandas stream once filled them
+    with NaN, which Arrow cannot turn into a map). Key m has a left row
+    before and one after its only snapshot; key u has no snapshot."""
     import datetime as dt
 
+    t7, t8, t10 = (dt.datetime(2024, 1, 1, h, 0, 0) for h in (7, 8, 10))
+    left = spark.createDataFrame(
+        [("m", t7), ("m", t10), ("u", t10)], "conv_id string, ts timestamp"
+    )
     right = spark.createDataFrame(
-        [("m", dt.datetime(2024, 1, 1, 8, 0, 0), 4.0, {"k": 1.0})],
+        [("m", t8, 4.0, {"k": 1.0})],
         "conv_id string, snap_ts timestamp, f double, extras map<string,double>",
     )
-    # window nearest sorts its prev/next structs by the orderable subset
-    for strategy, direction in (
-        ("window", "backward"), ("merge", "backward"), ("window", "nearest"),
-    ):
-        row = asof_join(left, right, strategy=strategy, direction=direction).collect()[0]
-        assert row["f"] == 4.0, (strategy, direction)
-        assert row["extras"] == {"k": 1.0}, (strategy, direction)
+    snap, miss = (4.0, {"k": 1.0}), (None, None)
+    want = {
+        "backward": {("m", t7): miss, ("m", t10): snap, ("u", t10): miss},
+        "forward": {("m", t7): snap, ("m", t10): miss, ("u", t10): miss},
+        "nearest": {("m", t7): snap, ("m", t10): snap, ("u", t10): miss},
+    }
+    for direction, expected in want.items():
+        for shape, kw in INLINE.items():
+            got = {
+                (r["conv_id"], r["ts"]): (r["f"], r["extras"])
+                for r in asof_join(left, right, direction=direction, **kw).collect()
+            }
+            assert got == expected, (direction, shape, got)

@@ -10,14 +10,18 @@ in-cap gate fails any entry below 1.0.
 """
 
 import importlib.util
+import os
+import subprocess
 import sys
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
 
+ROOT = Path(__file__).resolve().parent.parent
 spec = importlib.util.spec_from_file_location(
-    "check_contract", "/root/repo/tools/check_contract.py"
+    "check_contract", ROOT / "tools" / "check_contract.py"
 )
 check_contract = importlib.util.module_from_spec(spec)
 sys.modules["check_contract"] = check_contract
@@ -113,3 +117,29 @@ def test_contract_registry_structure():
         assert k in cap, f"{k} should be in-cap after the r7 rotation"
     for k in ("j5_anti_join", "w5_cumulative", "o4_except", "f_date_funcs"):
         assert k not in cap, f"{k} should be in the tail after the r7 rotation"
+
+
+@pytest.mark.parametrize("tool", ["check_contract.py", "audit_oracles.py"])
+def test_tools_import_the_entry_of_their_own_checkout(tmp_path, tool):
+    """Each tool puts its own checkout's root first on sys.path, so run from
+    a second checkout it checks that checkout's __spark_entry__: a copy in
+    tmp_path/tools/ must import the stub entry at tmp_path, even with this
+    checkout (for pitfeat) on PYTHONPATH."""
+    (tmp_path / "tools").mkdir()
+    copy = tmp_path / "tools" / tool
+    copy.write_text((ROOT / "tools" / tool).read_text())
+    (tmp_path / "__spark_entry__.py").write_text("STUB = True\n")
+    elsewhere = tmp_path / "cwd"
+    elsewhere.mkdir()
+    code = (
+        "import importlib.util, sys\n"
+        f"spec = importlib.util.spec_from_file_location('tool', {str(copy)!r})\n"
+        "spec.loader.exec_module(importlib.util.module_from_spec(spec))\n"
+        "print(sys.modules['__spark_entry__'].__file__)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=elsewhere, capture_output=True,
+        text=True, env={**os.environ, "PYTHONPATH": str(ROOT)}, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert Path(out.stdout.strip().splitlines()[-1]) == tmp_path / "__spark_entry__.py"

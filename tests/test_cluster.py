@@ -8,6 +8,8 @@ op IS hash-gradable (the cluster_score contract entry); here it gets a
 pandas contingency oracle plus edge semantics.
 """
 
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -167,7 +169,7 @@ def test_cluster_corpus_job_end_to_end(spark, tmp_path):
     import numpy as np
     import pyspark.sql.functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from jobs.cluster_corpus import run
 
     k = 8

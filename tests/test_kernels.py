@@ -10,6 +10,7 @@ import pytest
 
 from pitfeat.ops.asof import asof_join
 from pitfeat.ops.dedup import minhash_signatures, simhash
+from tests.oracle_pandas import salting_shapes
 
 EDGE_TEXTS = [
     (0, ""),                       # empty
@@ -156,7 +157,7 @@ if HAVE_HYPOTHESIS:
     )
     def test_asof_property_vs_merge_asof(spark, lefts, rights, allow_exact):
         """SURVEY §5 item 1 as a property: for arbitrary small frames, the
-        window-strategy as-of equals pandas.merge_asof (ties, misses,
+        window as-of equals pandas.merge_asof (ties, misses,
         duplicates-free right side)."""
         base = dt.datetime(2024, 1, 1)
         lpdf = pd.DataFrame(
@@ -215,9 +216,10 @@ if HAVE_HYPOTHESIS:
         direction=st.sampled_from(["backward", "forward", "nearest"]),
     )
     def test_asof_directions_property(spark, lefts, rights, direction):
-        """Both strategies in all three directions equal pandas.merge_asof on
-        arbitrary small frames (duplicates-free right side, so only the
-        search semantics — not the tie rules — are in play)."""
+        """All three directions under every salting shape equal
+        pandas.merge_asof on arbitrary small frames (duplicates-free right
+        side, so only the search semantics — not the tie rules — are in
+        play). Threshold 2 salts the keys drawn more than once."""
         base = dt.datetime(2024, 1, 1)
         lpdf = pd.DataFrame(
             {
@@ -248,20 +250,20 @@ if HAVE_HYPOTHESIS:
             by="conv_id",
             direction=direction,
         ).sort_values(["conv_id", "ts"], kind="mergesort").reset_index(drop=True)
-        for strategy in ("window", "merge"):
+        for shape, kw in salting_shapes(2).items():
             got = (
-                asof_join(ldf, rdf, strategy=strategy, direction=direction)
+                asof_join(ldf, rdf, direction=direction, **kw)
                 .toPandas()
                 .sort_values(["conv_id", "ts"], kind="mergesort")
                 .reset_index(drop=True)
             )
-            assert len(got) == len(want), strategy
+            assert len(got) == len(want), shape
             pd.testing.assert_series_equal(
-                got["snap_ts"], want["snap_ts"], check_names=False, obj=strategy
+                got["snap_ts"], want["snap_ts"], check_names=False, obj=shape
             )
             pd.testing.assert_series_equal(
                 got["val"].astype(float), want["val"].astype(float),
-                check_names=False, obj=strategy,
+                check_names=False, obj=shape,
             )
 
 

@@ -34,8 +34,19 @@ def _oracle_pipeline(tp: pd.DataFrame, sp: pd.DataFrame):
     return out, survivors, vecs
 
 
-def _spark_pipeline(spark, transcripts, snapshots, strategy="window"):
-    cfg = PitfeatConfig(asof_strategy=strategy, session_gap_s=1800)
+# Pipeline salting configs: plain, every conv salted x4, and targeted x4
+# over the convs with at least 20 turns (the fixture's average). Pipeline
+# always passes hot_key_threshold along with salt_buckets, so salting every
+# conv takes threshold 1.
+SALTING = {
+    "window": {},
+    "salted": {"salt_buckets": 4, "hot_key_threshold": 1},
+    "targeted": {"salt_buckets": 4, "hot_key_threshold": 20},
+}
+
+
+def _spark_pipeline(spark, transcripts, snapshots, salting=None):
+    cfg = PitfeatConfig(session_gap_s=1800, **(salting or {}))
     p = (
         Pipeline.from_df(spark, transcripts, cfg)
         .asof_snapshots(snapshots)
@@ -51,13 +62,13 @@ def _spark_pipeline(spark, transcripts, snapshots, strategy="window"):
 
 def test_golden_allclose_both_strategies(spark, transcripts, snapshots, transcripts_pd, snapshots_pd):
     oracle_df, survivors, oracle_vecs = _oracle_pipeline(transcripts_pd, snapshots_pd)
-    for strategy in ("window", "merge"):
-        p = _spark_pipeline(spark, transcripts, snapshots, strategy)
-        assert p.feature_cols == survivors, (strategy, p.feature_cols, survivors)
+    for shape, salting in SALTING.items():
+        p = _spark_pipeline(spark, transcripts, snapshots, salting)
+        assert p.feature_cols == survivors, (shape, p.feature_cols, survivors)
         got = p.df.select(*KEYS, "text", "features").toPandas().sort_values(KEYS).reset_index(drop=True)
         vecs = np.array(got["features"].tolist(), dtype=float)
         assert vecs.shape == oracle_vecs.shape
-        assert np.allclose(vecs, oracle_vecs, equal_nan=True), strategy
+        assert np.allclose(vecs, oracle_vecs, equal_nan=True), shape
         # stable-order text invariant: byte equality input->output
         assert (got["text"] == oracle_df["text"]).all()
         # manifest records pruning decisions for resume

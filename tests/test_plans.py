@@ -225,7 +225,7 @@ def test_ivf_kernel_partitions_follow_the_work(spark, monkeypatch):
 
 def test_ewma_plan_single_pass(spark):
     """W11 ewma must plan ONE streaming MapInPandas pass over ONE key
-    co-locating exchange + in-partition sort — the merge-strategy shape:
+    co-locating exchange + in-partition sort — a single sorted stream:
     no extra shuffle, no row-wise Python, no window fallback. (r8: the
     exchange is HASH partitioning — co-location is all the kernel needs,
     and range partitioning's boundary-sampling job re-executed the whole

@@ -16,10 +16,11 @@ Usage: python tools/audit_oracles.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
 
