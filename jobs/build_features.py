@@ -29,36 +29,41 @@ from pitfeat.checkpoint import resume_or_compute
 from pitfeat.pipeline import Pipeline
 
 
+KEYS = ["conv_id", "turn_idx", "ts"]
+
+
 def build_asof(spark: SparkSession, args, cfg: PitfeatConfig):
-    """Stage 1: transcripts -> point-in-time snapshot join (the expensive
-    shuffle+sort stage and therefore the natural checkpoint cut)."""
-    return (
+    """Stage 1: transcripts -> point-in-time snapshot join -> every conv_id
+    window (gap, rolling, cumulative tools, sessions), projected to
+    ``KEYS`` + the unscaled features in manifest order. Every sort and
+    window of the build happens here, so this is the checkpoint cut: text,
+    role and tool are pruned out of the scan and the as-of sort, and the
+    stats pass of stage 2 scans the slim cut instead of re-running the
+    windows."""
+    p = (
         Pipeline.from_transcripts(spark, args.transcripts, cfg)
         .asof_snapshots(args.snapshots)
-        .df
-    )
-
-
-def build_rest(spark: SparkSession, args, cfg: PitfeatConfig, asof_df):
-    """Stage 2: windowed features -> (normalize) -> vector assembly over the
-    stage-1 output. Takes the as-of frame as a DataFrame so it composes
-    identically whether stage 1 was just computed (same logical plan) or
-    read back from a checkpoint (resume)."""
-    fcols = [c for c in asof_df.columns if c.startswith("f_")]
-    p = Pipeline(spark, asof_df, cfg, fcols, {})
-    p = (
-        p.with_gap()
+        .with_gap()
         .rolling("gap_s", ["mean", "max"], window=cfg.rolling_turns)
         .cumulative_tools()
         .sessionize()
     )
+    return p.df.select(*KEYS, *p.feature_cols)
+
+
+def build_rest(spark: SparkSession, args, cfg: PitfeatConfig, asof_df):
+    """Stage 2: (normalize) -> vector assembly over the stage-1 cut. The
+    feature columns are the cut's non-key columns, in their written
+    (manifest) order, so the stage composes identically whether stage 1 was
+    just computed (same logical plan) or read back from a checkpoint
+    (resume); over a checkpoint read it runs no window."""
+    fcols = [c for c in asof_df.columns if c not in KEYS]
+    p = Pipeline(spark, asof_df, cfg, fcols, {})
     if not getattr(args, "no_normalize", False):
         p = p.normalize(prune=True)
     p = p.assemble()
-    # output contract (SURVEY.md §1.2): (conv_id, turn_idx, ts, features).
-    # Projecting here lets Catalyst prune text/role/tool out of the scan AND
-    # out of the as-of union sort — the sort payload drops ~3x
-    p.df = p.df.select("conv_id", "turn_idx", "ts", "features")
+    # output contract (SURVEY.md §1.2): (conv_id, turn_idx, ts, features)
+    p.df = p.df.select(*KEYS, "features")
     return p
 
 
@@ -127,12 +132,14 @@ def main(argv=None):
     t0 = time.perf_counter()
     resumed_stages = {}
     if args.resume:
-        # STAGED resume (VERDICT r3 #2): stage 1 (the as-of join) and stage 2
-        # (windows -> normalize -> assembly) checkpoint independently, so a
-        # run killed between the two commits restarts from the committed
-        # as-of output instead of recomputing it. checkpoint_valid matches on
-        # (stage, config_hash, inputs), so a config or input change
-        # invalidates both.
+        # STAGED resume (VERDICT r3 #2): stage 1 (as-of join + windows, the
+        # unscaled features) and stage 2 (normalize -> assembly) checkpoint
+        # independently, so a run killed between the two commits restarts
+        # from the committed stage-1 cut, and the min/max pass of stage 2
+        # scans that cut instead of recomputing the windows.
+        # checkpoint_valid matches on (stage, config_hash, inputs), and
+        # config_hash folds in the checkpoint layout version, so a config,
+        # input or layout change invalidates both.
         inputs = [args.transcripts, args.snapshots]
         asof_ckpt = os.path.join(args.ckpt_root, args.resume, "asof")
         asof_df, resumed_stages["asof"] = resume_or_compute(

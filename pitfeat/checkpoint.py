@@ -28,6 +28,7 @@ from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 MARKER = "_SUCCESS_PITFEAT"
 LINEAGE = "_lineage.json"
@@ -116,8 +117,14 @@ def resume_or_compute(
     inputs: list[str] | None = None,
 ) -> tuple[DataFrame, bool]:
     """Returns (df, resumed). ``resumed=True`` means the checkpoint was read
-    instead of recomputing the stage."""
+    instead of recomputing the stage. Either way ``data/`` is read with the
+    schema the lineage records, so the read-back starts no schema-inference
+    job."""
     resumed = checkpoint_valid(ckpt_dir, config_hash, inputs, stage=stage)
-    if not resumed:
-        write_checkpoint(fn(), ckpt_dir, stage, config_hash, inputs)
-    return spark.read.parquet(os.path.join(ckpt_dir, "data")), resumed
+    if resumed:
+        with open(os.path.join(ckpt_dir, LINEAGE)) as f:
+            lin = json.load(f)
+    else:
+        lin = write_checkpoint(fn(), ckpt_dir, stage, config_hash, inputs)
+    schema = T.StructType.fromJson(lin["schema"])
+    return spark.read.schema(schema).parquet(os.path.join(ckpt_dir, "data")), resumed

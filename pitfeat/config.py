@@ -11,6 +11,14 @@ import json
 from dataclasses import asdict, dataclass, field
 
 
+# Version of what the flagship build writes at its checkpoint cuts. Bump it
+# when a stage's checkpoint changes layout, so checkpoints written in the
+# old layout stop matching ``config_hash`` and are recomputed, never read as
+# the new one. 2: the stage-1 cut carries the windowed, unscaled features
+# (conv_id, turn_idx, ts, features) instead of the as-of join output.
+CHECKPOINT_LAYOUT = 2
+
+
 @dataclass(frozen=True)
 class PitfeatConfig:
     # --- as-of join (J1/J2) ---
@@ -58,8 +66,10 @@ class PitfeatConfig:
     extra: dict = field(default_factory=dict, compare=False)
 
     def config_hash(self) -> str:
-        """Stable hash for lineage manifests (S3)."""
+        """Stable hash for lineage manifests (S3): the config's fields plus
+        ``CHECKPOINT_LAYOUT``."""
         d = asdict(self)
         d.pop("extra", None)
+        d["__checkpoint_layout"] = CHECKPOINT_LAYOUT
         blob = json.dumps(d, sort_keys=True, default=str).encode()
         return hashlib.sha256(blob).hexdigest()[:16]

@@ -18,16 +18,19 @@ spill, so memory does not grow with key heat.
 
 Hot keys: ``salt_buckets`` splits a key into B sorted streams (left rows by
 hash salt, right rows replicated xB); with ``hot_threshold`` only keys at or
-above the threshold take the salted path (targeted salting,
-``_split_hot_keys``). Measured on a 4-vCPU, 15 GB host with
+above the threshold are split, inside the same single window (targeted
+salting, ``_salt``). Measured on a 4-vCPU, 15 GB host with
 ``bench/run_hotkey_stress.py --turns 10000000 --cpus 4 --reps 3`` (one
-5M-turn conversation; warm reps 2-3): plain window 10.3-11.1 s wall /
-24-26 CPU-s, targeted window (B=4, threshold 100k) 10.9-13.8 s / 36-47
-CPU-s, and the retired ``mapInPandas`` merge stream 26.8-28.9 s / 75-83
-CPU-s, all with one checksum; peak JVM RSS 5.0 / 5.6 / 4.1 GB (merge plus
-~0.13 GB per Python worker). The 100M-turn run where the stream once won on
-32 cores (BASELINE.md) needs more RAM than that host has and was not
-repeated.
+5M-turn conversation; warm reps 2-3): plain window 9.3-11.1 s wall /
+21.6-25.1 CPU-s, targeted window (B=4, threshold 100k) 8.3 s / 26.3-30.4
+CPU-s, one checksum; peak JVM RSS 4.7 GB plain, 6.1 GB over both legs.
+Targeted salting still costs more CPU than the plain fill (the xB right
+copies of the hot key and the key-count pass), but less than separate
+cold and hot window plans joined by a union, which read 10.3-11.0 s /
+35.4-39.6 CPU-s back to back on the same host. The retired
+``mapInPandas`` merge stream read 26.8-28.9 s / 75-83 CPU-s on that host
+earlier. The 100M-turn run where the stream once won on 32 cores
+(BASELINE.md) needs more RAM than that host has and was not repeated.
 
 Tie rule: with ``allow_exact=True`` an equal-timestamp snapshot matches
 (right rows sort before left rows at equal ts). With ``allow_exact=False``
@@ -118,10 +121,10 @@ def asof_join(
       the driver contract; measured 5x slower than unsalted on a 30%-hot
       zipf fixture because the right side replicates xB for all keys).
     - ``hot_threshold``: with ``salt_buckets``, engages TARGETED salting —
-      a one-pass key-frequency sketch picks keys at/above the threshold,
-      only those take the salted path. Set it to the rows-per-key size
-      above which one task's sort becomes the straggler
-      (PitfeatConfig.hot_key_threshold wires 5M).
+      a one-pass key count picks keys at/above the threshold and only those
+      are split; cold keys ride the same window unsplit (``_salt``). Set it
+      to the rows-per-key size above which one task's sort becomes the
+      straggler (PitfeatConfig.hot_key_threshold wires 5M).
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
@@ -136,47 +139,59 @@ def asof_join(
     # after this).
     right = right.where(F.col(on).isNotNull() & F.col(right_ts).isNotNull())
     impl = _asof_window_nearest if direction == "nearest" else _asof_window
-    if salt_buckets > 0 and hot_threshold:
-        lh, lc, rh, rc = _split_hot_keys(left, right, on, hot_threshold)
-        cold = impl(
-            lc, rc, on, left_ts, right_ts, allow_exact, tolerance_s, 0,
-            direction=direction,
-        )
-        hot = impl(
-            lh, rh, on, left_ts, right_ts, allow_exact, tolerance_s, salt_buckets,
-            direction=direction,
-        )
-        return cold.unionByName(hot)
     return impl(
         left, right, on, left_ts, right_ts, allow_exact, tolerance_s, salt_buckets,
-        direction=direction,
+        hot_threshold, direction=direction,
     )
 
 
-def _split_hot_keys(left: DataFrame, right: DataFrame, on: str, hot_threshold: int):
-    """TARGETED salting split (the K2 design): blanket salting replicates the
-    right side xB for EVERY key and splits every cold conv into B near-empty
-    streams — measured 5-8x SLOWER than unsalted on a 30%-hot zipf fixture.
-    A one-pass key-frequency sketch picks the hot keys (tiny by definition =>
-    broadcast); only they take the salted path, everything else the plain
-    path, and the two unions are plan-compatible."""
-    hot_keys = (
-        left.groupBy(on).count().where(F.col("count") >= hot_threshold).select(on)
+def _salt(
+    left: DataFrame,
+    lt: DataFrame,
+    rts: list[DataFrame],
+    on: str,
+    salt_buckets: int,
+    hot_threshold: int | None,
+):
+    """J2 salting of the tagged sides: returns (lt, rts, window keys).
+
+    A salted key is split into B sorted streams: its left rows take
+    ``pmod(xxhash64(key, ts), B)`` and its right rows are replicated xB.
+    Blanket salting (no ``hot_threshold``) salts every key. Targeted salting
+    salts only the keys with at least ``hot_threshold`` left rows: a
+    one-pass key count picks them (tiny by definition => broadcast), a
+    left-outer join flags both sides with ``__hot``, and cold keys take
+    salt 0 and one right copy, so one exchange, one sort and one window
+    serve every key."""
+    if salt_buckets <= 0:
+        return lt, rts, [on]
+    b = salt_buckets
+    hot = F.lit(True)
+    if hot_threshold:
+        hot_keys = F.broadcast(
+            left.groupBy(on).count().where(F.col("count") >= hot_threshold)
+            .select(on, F.lit(True).alias("__hot"))
+        )
+        lt = lt.join(hot_keys, on, "left")
+        rts = [r.join(hot_keys, on, "left") for r in rts]
+        hot = F.col("__hot")  # null (cold) for keys missing from hot_keys
+    lt = lt.withColumn(
+        "__salt",
+        F.when(hot, F.pmod(F.xxhash64(F.col(on), F.col("__t")), F.lit(b)))
+        .otherwise(0)
+        .cast("int"),
     )
-    lh = left.join(F.broadcast(hot_keys), on, "left_semi")
-    lc = left.join(F.broadcast(hot_keys), on, "left_anti")
-    rh = right.join(F.broadcast(hot_keys), on, "left_semi")
-    rc = right.join(F.broadcast(hot_keys), on, "left_anti")
-    return lh, lc, rh, rc
+    fan = F.when(hot, F.array(*[F.lit(i) for i in range(b)])).otherwise(F.array(F.lit(0)))
+    rts = [r.withColumn("__salt", F.explode(fan)) for r in rts]
+    return lt, rts, [on, "__salt"]
 
 
 # Tie rule via the tag's sort position at equal ts: allow_exact sorts right
 # rows BEFORE left rows (tag 0 < 1) so an equal-timestamp snapshot is visible;
 # strict sorts them after.
 #
-# Salting (J2) composes: left rows get pmod(xxhash64(key, ts), B), the right
-# side is replicated xB, and the window partitions on (key, salt) — a hot key
-# becomes B independent sorted streams.
+# Salting (J2, ``_salt``) composes: the window partitions on (key, salt), so
+# a salted key becomes B independent sorted streams.
 
 
 def _asof_window(
@@ -188,6 +203,7 @@ def _asof_window(
     allow_exact: bool,
     tolerance_s: float | None,
     salt_buckets: int = 0,
+    hot_threshold: int | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """``forward`` (r5) is the same pure-Tungsten fill over a DESCENDING ts
@@ -224,17 +240,7 @@ def _asof_window(
         *[F.lit(None).cast(typ[c]).alias(c) for c in pass_left],
         F.struct(*[F.col(c) for c in right_val_cols]).alias("__rv"),
     )
-    keys = [on]
-    if salt_buckets > 0:
-        b = salt_buckets
-        lt = lt.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(on), F.col("__t")), F.lit(b)).cast("int")
-        )
-        rt = (
-            rt.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(b)])))
-            .withColumn("__salt", F.col("__salt").cast("int"))
-        )
-        keys = [on, "__salt"]
+    lt, (rt,), keys = _salt(left, lt, [rt], on, salt_buckets, hot_threshold)
     cols_order = keys + ["__t", "__tag"] + pass_left + ["__rv"]
     unioned = lt.select(*cols_order).unionByName(rt.select(*cols_order))
 
@@ -285,6 +291,7 @@ def _asof_window_nearest(
     allow_exact: bool,
     tolerance_s: float | None,
     salt_buckets: int = 0,
+    hot_threshold: int | None = None,
     direction: str = "nearest",
 ) -> DataFrame:
     """Pure-JVM nearest (r5): ONE sorted window pass computes BOTH the
@@ -342,20 +349,7 @@ def _asof_window_nearest(
         F.lit(None).cast(rv_type).alias("__pv"),
         rv_struct.alias("__nv"),
     )
-    keys = [on]
-    if salt_buckets > 0:
-        b = salt_buckets
-        lt = lt.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(on), F.col("__t")), F.lit(b)).cast("int")
-        )
-        salted = []
-        for r in (rp, rn):
-            salted.append(
-                r.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(b)])))
-                .withColumn("__salt", F.col("__salt").cast("int"))
-            )
-        rp, rn = salted
-        keys = [on, "__salt"]
+    lt, (rp, rn), keys = _salt(left, lt, [rp, rn], on, salt_buckets, hot_threshold)
     cols_order = keys + ["__t", "__tag"] + pass_left + ["__pv", "__nv"]
     unioned = (
         lt.select(*cols_order)

@@ -85,17 +85,18 @@ def prune_degenerate(df: DataFrame, stats: MinMaxStats) -> tuple[DataFrame, list
 def normalize_minmax(df: DataFrame, stats: MinMaxStats, cols: list[str] | None = None) -> DataFrame:
     """A4: x' = (x - min) / (max - min) per surviving column; NaN passes through.
 
-    Pure column expressions — stats are literals folded into the plan, so the
-    whole transform stays inside one whole-stage-codegen'd Project.
+    Pure column expressions — stats are literals folded into the plan, and
+    every column is scaled by ONE ``withColumns`` projection (not a chain of
+    per-column ``withColumn`` calls, each re-analysed by the driver).
     """
     cols = cols if cols is not None else stats.survivors()
-    out = df
+    scaled = {}
     for c in cols:
         mn, mx = stats.mins[c], stats.maxs[c]
         if mn is None or mx is None or mx == mn:
             raise ValueError(f"normalize_minmax: column {c!r} is degenerate; prune first")
-        out = out.withColumn(c, (F.col(c) - F.lit(float(mn))) / F.lit(float(mx - mn)))
-    return out
+        scaled[c] = (F.col(c) - F.lit(float(mn))) / F.lit(float(mx - mn))
+    return df.withColumns(scaled)
 
 
 # ---------------------------------------------------------------------------
@@ -158,13 +159,13 @@ def normalize_zscore(
     Project, exactly like normalize_minmax."""
     cols = cols if cols is not None else stats.survivors()
     deg = set(stats.degenerate())
-    out = df
+    scaled = {}
     for c in cols:
         if c in deg:
             raise ValueError(f"normalize_zscore: column {c!r} is degenerate; prune first")
         mu, sd = float(stats.means[c]), float(stats.stds[c])
-        out = out.withColumn(c, (F.col(c) - F.lit(mu)) / F.lit(sd))
-    return out
+        scaled[c] = (F.col(c) - F.lit(mu)) / F.lit(sd)
+    return df.withColumns(scaled)
 
 
 # ---------------------------------------------------------------------------

@@ -131,9 +131,11 @@ class Pipeline:
     def normalize(self, prune: bool | None = None) -> "Pipeline":
         prune = self.cfg.prune_degenerate if prune is None else prune
         # the stats pass is a separate action that recomputes the upstream
-        # plan; with the pure-JVM window as-of that recompute is cheaper than
-        # persisting the wide frame (measured), and at cluster scale a
-        # checkpoint (S3/S4) is the right cut point instead
+        # plan. The flagship job (jobs/build_features.py) makes its stage-1
+        # checkpoint the stats cut: the windows run once, before the write,
+        # and this pass scans the slim written features. Without a cut
+        # (plain Pipeline chains) the recompute is cheaper than persisting
+        # the wide frame (measured).
         stats = compute_minmax(self.df, self.feature_cols)
         df, cols = (prune_degenerate(self.df, stats) if prune else (self.df, list(self.feature_cols)))
         df = normalize_minmax(df, stats, cols)

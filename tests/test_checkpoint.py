@@ -9,6 +9,18 @@ import pytest
 from pitfeat.checkpoint import checkpoint_valid, resume_or_compute, write_checkpoint
 
 
+def _jobs(spark, group, fn) -> int:
+    """Spark jobs that ``fn()`` starts, counted over a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_checkpoint_roundtrip_and_lineage(spark, transcripts, tmp_path):
     ck = str(tmp_path / "ck1")
     lin = write_checkpoint(transcripts, ck, "stage1", "cfg123", inputs=["in:a"])
@@ -28,22 +40,13 @@ def test_checkpoint_roundtrip_and_lineage(spark, transcripts, tmp_path):
         assert pq.read_metadata(path).num_rows == p["rows"]
 
     # ... and cost no Spark job beyond the write itself
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    plain = jobs(
+    plain = _jobs(
+        spark,
         "ck-plain-write",
         lambda: transcripts.write.mode("overwrite").parquet(str(tmp_path / "plain")),
     )
-    ckpt = jobs(
+    ckpt = _jobs(
+        spark,
         "ck-checkpoint-write",
         lambda: write_checkpoint(transcripts, str(tmp_path / "ck1b"), "stage1", "cfg123"),
     )
@@ -147,3 +150,68 @@ def test_resume_validates_stage(spark, transcripts, tmp_path):
     out, resumed = resume_or_compute(spark, d, "normalize", "cfg1", lambda: b)
     assert not resumed  # stage mismatch -> recomputed (previously resumed=True)
     assert out.columns == ["conv_id"]
+
+
+def test_read_back_uses_the_lineage_schema(spark, transcripts, tmp_path):
+    """resume_or_compute reads data/ with the schema _lineage.json records:
+    the computed branch starts no job beyond the write, the resumed branch
+    starts none at all (no parquet schema-inference job), and the frame
+    read back has the written frame's columns and types."""
+    ck = str(tmp_path / "ck_schema")
+    got = {}
+    computed = _jobs(
+        spark,
+        "ck-schema-computed",
+        lambda: got.update(c=resume_or_compute(spark, ck, "s", "h1", lambda: transcripts)),
+    )
+    write_only = _jobs(
+        spark,
+        "ck-schema-write",
+        lambda: write_checkpoint(transcripts, str(tmp_path / "ck_w"), "s", "h1"),
+    )
+    assert computed == write_only
+    resumed = _jobs(
+        spark,
+        "ck-schema-resumed",
+        lambda: got.update(r=resume_or_compute(spark, ck, "s", "h1", lambda: transcripts)),
+    )
+    assert resumed == 0
+    assert (got["c"][1], got["r"][1]) == (False, True)
+    written = [(f.name, f.dataType) for f in transcripts.schema.fields]
+    for df, _ in (got["c"], got["r"]):
+        assert [(f.name, f.dataType) for f in df.schema.fields] == written
+    assert got["r"][0].count() == transcripts.count()
+
+
+def test_checkpoint_of_the_previous_layout_is_recomputed(spark, transcripts, snapshots, tmp_path):
+    """config_hash folds in CHECKPOINT_LAYOUT: a stage-1 checkpoint committed
+    under the hash of the previous layout (the bare as-of join output, no
+    window columns) is recomputed as the windowed cut, never resumed."""
+    import hashlib
+    from dataclasses import asdict
+    from types import SimpleNamespace
+
+    from jobs.build_features import KEYS, build_asof
+    from pitfeat.config import PitfeatConfig
+    from pitfeat.ops.asof import asof_join
+
+    cfg = PitfeatConfig()
+    fields = asdict(cfg)
+    fields.pop("extra")
+    old_hash = hashlib.sha256(
+        json.dumps(fields, sort_keys=True, default=str).encode()
+    ).hexdigest()[:16]
+    assert cfg.config_hash() != old_hash
+
+    t, s = str(tmp_path / "t"), str(tmp_path / "s")
+    transcripts.write.parquet(t)
+    snapshots.write.parquet(s)
+    args = SimpleNamespace(transcripts=t, snapshots=s)
+    ck = str(tmp_path / "asof")
+    write_checkpoint(asof_join(transcripts, snapshots), ck, "asof", old_hash, inputs=[t, s])
+    out, resumed = resume_or_compute(
+        spark, ck, "asof", cfg.config_hash(), lambda: build_asof(spark, args, cfg), inputs=[t, s]
+    )
+    assert not resumed
+    assert out.columns[:3] == KEYS and "session_no" in out.columns
+    assert not {"text", "role", "tool"} & set(out.columns)

@@ -5,7 +5,11 @@ keep its shuffle count bounded, filters must reach the parquet scan, and no
 operator may leave cached blocks behind after its result is materialized.
 """
 
+import re
+from types import SimpleNamespace
+
 import pyspark.sql.functions as F
+import pytest
 
 from pitfeat.ops.asof import asof_join
 from pitfeat.ops.windows import rolling, sessionize, with_gap
@@ -13,6 +17,58 @@ from pitfeat.ops.windows import rolling, sessionize, with_gap
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _nodes(df, name: str) -> int:
+    """Physical plan nodes called ``name`` (the first word of a plan line)."""
+    return re.findall(r"^[\s:+-]*(\w+)", _plan(df), re.M).count(name)
+
+
+@pytest.fixture(scope="module")
+def parquet_inputs(transcripts, snapshots, tmp_path_factory):
+    """The fixtures written to parquet: their in-memory plans carry the
+    generator's own windows and unions, which would blur node counts."""
+    d = tmp_path_factory.mktemp("plan_inputs")
+    t, s = str(d / "transcripts"), str(d / "snapshots")
+    transcripts.write.parquet(t)
+    snapshots.write.parquet(s)
+    return SimpleNamespace(transcripts=t, snapshots=s)
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_targeted_salting_is_one_window(spark, parquet_inputs, direction):
+    """Targeted salting flags hot keys on both sides and salts them inside
+    the one window fill: one Sort and one Window serve hot and cold keys
+    alike, and the only Union is the fill's own left/right tag union (no
+    cold/hot split joined by a second union)."""
+    t = spark.read.parquet(parquet_inputs.transcripts)
+    s = spark.read.parquet(parquet_inputs.snapshots)
+    j = asof_join(t, s, salt_buckets=4, hot_threshold=20, direction=direction)
+    assert (_nodes(j, "Window"), _nodes(j, "Sort"), _nodes(j, "Union")) == (1, 1, 1)
+
+
+def test_build_stages_cut_after_the_windows(spark, parquet_inputs, tmp_path):
+    """The flagship job's stage-1 checkpoint holds the keys plus the unscaled
+    features (no text/role/tool payload), and stage 2 over that checkpoint
+    runs no window: its min/max pass scans the cut."""
+    from jobs.build_features import KEYS, build_asof, build_rest
+    from pitfeat.checkpoint import resume_or_compute
+    from pitfeat.config import PitfeatConfig
+    from pitfeat.schema import snapshot_feature_cols
+
+    cfg = PitfeatConfig(salt_buckets=4, hot_key_threshold=20)
+    args = SimpleNamespace(**vars(parquet_inputs), no_normalize=False)
+    cut, _ = resume_or_compute(
+        spark, str(tmp_path / "asof"), "asof", cfg.config_hash(),
+        lambda: build_asof(spark, args, cfg),
+    )
+    w = cfg.rolling_turns
+    assert cut.columns == KEYS + snapshot_feature_cols() + [
+        "gap_s", f"gap_s_roll{w}_mean", f"gap_s_roll{w}_max", "tool_calls_cum", "session_no",
+    ]
+    out = build_rest(spark, args, cfg, cut).df
+    assert out.columns == KEYS + ["features"]
+    assert _nodes(out, "Window") == 0
 
 
 def test_flagship_composition_exchange_count(transcripts, snapshots):
